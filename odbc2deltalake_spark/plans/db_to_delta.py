@@ -106,7 +106,9 @@ class _Ctx:
         out = convert_projection(df, self.cols, self.target_name, self.cfg.no_trim)
         return self.cfg.transformation_hook(out, "sql2delta")
 
-    def append_history(self, df: DataFrame, delta_interval=None) -> None:
+    def append_history(
+        self, df: DataFrame, delta_interval=None, counted: bool = False
+    ) -> None:
         """Append to the SCD2 history with drift-aware schema merging
         (type widening flows through; reference Delta equivalent:
         mergeSchema + delta.enableTypeWidening,
@@ -120,7 +122,11 @@ class _Ctx:
         (:func:`read_current_rows`) prune fully-superseded load commits
         at the commit log; appends without the bounds (tombstones,
         strange updates) are simply never pruned — skipping is
-        conservative by construction."""
+        conservative by construction.
+
+        ``counted`` counts the rows as they are written, so a batch the
+        caller cannot size in advance needs no emptiness probe: a
+        zero-row append publishes no commit."""
         known = {SYS.timestamp: (self.load_ts, self.load_ts)}
         if (
             delta_interval is not None
@@ -129,16 +135,19 @@ class _Ctx:
             and delta_interval[1] is not None
         ):
             known[self.delta_name] = tuple(delta_interval)
-        self.dest.delta.write(
-            df,
+        # zero-cost data-skipping stats: __timestamp is a per-load
+        # constant the engine already holds, so the commit interval is
+        # exact without any stats job — watermark/latest-load reads then
+        # prune whole older commits at the commit log
+        kw = dict(
             mode="append",
             merge_schema=self.cfg.allow_schema_drift in (True, "new_only"),
-            # zero-cost data-skipping stats: __timestamp is a per-load
-            # constant the engine already holds, so the commit interval
-            # is exact without any stats job — watermark/latest-load
-            # reads then prune whole older commits at the commit log
             known_stats=known,
         )
+        if counted:
+            self.dest.delta.write_counted_minmax(df, [], **kw)
+        else:
+            self.dest.delta.write(df, **kw)
 
 
 def _resolve_cols(
@@ -322,7 +331,11 @@ def do_full_load(ctx: _Ctx, mode: str) -> FullLoadResult:
         .filter(F.col(SYS.is_full_load))
         .select(*ctx.pk_names, ctx.delta_name)
     )
-    ctx.dest.latest_pk_version.write(latest, mode="overwrite")
+    # counted: the commit records the row count and delta-col bounds the
+    # next load's local watermark probe reads (_local_value_and_count)
+    ctx.dest.latest_pk_version.write_counted_minmax(
+        latest, [ctx.delta_name], mode="overwrite"
+    )
     ctx.logger.info("Full Load done, wrote meta for delta load", load="full")
     return FullLoadResult()
 
@@ -521,7 +534,9 @@ def do_delta_load(ctx: _Ctx, simple: bool = False, simple_check: bool = False) -
             ctx.delta_name,
             delta_load_value=delta_load_value,
         )
-        _, n = dest.latest_pk_version.write_counted(latest, mode="overwrite")
+        _, n, _ = dest.latest_pk_version.write_counted_minmax(
+            latest, [ctx.delta_name], mode="overwrite"
+        )
         return n
 
     with ThreadPoolExecutor(max_workers=2) as pool:
@@ -748,8 +763,6 @@ def _do_deletes(ctx: _Ctx, old_pk_version: int) -> None:
     )
     old_lpk = dest.latest_pk_version.read(ctx.spark, version=old_pk_version)
     dels = deletes_keys(old_lpk, current, ctx.pk_names)
-    if dels.isEmpty():
-        return
     schema = {f.name: f.dataType for f in dest.delta_1.schema().fields}
     tombs = tombstone_projection(
         dels,
@@ -758,7 +771,10 @@ def _do_deletes(ctx: _Ctx, old_pk_version: int) -> None:
         schema,
         ctx.load_ts,
     )
-    ctx.append_history(tombs)
+    # one pass: the append counts its rows, and with none (the usual
+    # load) it commits nothing — no separate emptiness job re-running
+    # the anti-join cascade
+    ctx.append_history(tombs, counted=True)
 
 
 # ------------------------------------------------------------- watermarks --
@@ -775,20 +791,17 @@ def _local_value_and_count(ctx: _Ctx, from_history: bool = False) -> tuple[Any, 
     ``latest_pk_version`` index is the correct local state — its MAX is
     the highest ingested delta value and its count the live-row count.
     ``from_history`` (append_inserts, which keeps no key index) falls back
-    to the history table like the reference does."""
+    to the history table like the reference does. The store answers from
+    commit metadata where its last index write recorded the count and
+    bounds, and scans otherwise."""
     if not from_history and ctx.dest.latest_pk_version.exists():
-        df = ctx.dest.latest_pk_version.read(ctx.spark)
+        table = ctx.dest.latest_pk_version
     elif ctx.dest.delta.exists():
-        df = ctx.dest.delta.read(ctx.spark)
+        table = ctx.dest.delta
     else:
         return None, 0
-    agg_max = (
-        F.max(F.col(ctx.delta_name)).alias("m")
-        if ctx.delta_name
-        else F.lit(None).alias("m")
-    )
-    row = df.agg(agg_max, F.count(F.lit(1)).alias("c")).first()
-    return _normalize_wm(row["m"]), row["c"]
+    wm, n = table.max_and_count(ctx.spark, ctx.delta_name)
+    return _normalize_wm(wm), n
 
 
 def _normalize_wm(v: Any) -> Any:

@@ -585,6 +585,7 @@ class TableStore(ABC):
         minmax_cols: list[str],
         mode: str = "append",
         merge_schema: bool = False,
+        known_stats: Optional[dict[str, tuple[Any, Any]]] = None,
     ) -> tuple[int, int, dict[str, tuple[Any, Any]]]:
         """Like :meth:`write_counted`, additionally returning exact
         {col: (min, max)} for ``minmax_cols`` — the aggregates ride the
@@ -593,28 +594,57 @@ class TableStore(ABC):
         write, which the A/B in :meth:`VersionedParquetTable.write`'s
         docstring measured at ~1.2s/load). The SCD2 engine uses this on
         its change-set writes and feeds the bounds forward as
-        ``known_stats`` on the history append."""
-        from pyspark.sql import Observation
-
+        ``known_stats`` on the history append. Here a zero-row append
+        still commits (an empty version); the commit-log store
+        overrides this to publish nothing."""
         cols = [c for c in minmax_cols if c in df.columns]
-        obs = Observation()
-        aggs = [F.count(F.lit(1)).alias("rows")]
-        for c in cols:
-            aggs.append(F.min(c).alias(f"__mn_{c}"))
-            aggs.append(F.max(c).alias(f"__mx_{c}"))
-        df = df.observe(obs, *aggs)
-        v = self.write(df, mode=mode, merge_schema=merge_schema)
-        vals = obs.get
-        return (
-            v,
-            int(vals["rows"]),
-            {c: (vals[f"__mn_{c}"], vals[f"__mx_{c}"]) for c in cols},
+        df, obs = _observe_count_minmax(df, cols)
+        v = self.write(
+            df, mode=mode, merge_schema=merge_schema, known_stats=known_stats
         )
+        return (v, *_observed_count_minmax(obs, cols))
 
     def count_rows(self, spark: SparkSession) -> int:
         """Current row count. Stores that track counts in commit metadata
         override this to answer without a scan."""
         return self.read(spark).count()
+
+    def max_and_count(
+        self, spark: SparkSession, col: Optional[str]
+    ) -> tuple[Any, int]:
+        """(MAX(col), COUNT(*)) of the current snapshot — the local
+        watermark probe. Stores that record exact counts and bounds in
+        commit metadata override this to answer without a scan."""
+        agg_max = F.max(F.col(col)) if col else F.lit(None)
+        row = self.read(spark).agg(
+            agg_max.alias("m"), F.count(F.lit(1)).alias("c")
+        ).first()
+        return row["m"], row["c"]
+
+
+def _observe_count_minmax(
+    df: DataFrame, cols: list[str]
+) -> tuple[DataFrame, Any]:
+    """``df`` with one Observation counting its rows and taking min/max
+    of ``cols`` as they stream through the write."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    for c in cols:
+        aggs.append(F.min(c).alias(f"__mn_{c}"))
+        aggs.append(F.max(c).alias(f"__mx_{c}"))
+    return df.observe(obs, *aggs), obs
+
+
+def _observed_count_minmax(
+    obs: Any, cols: list[str]
+) -> tuple[int, dict[str, tuple[Any, Any]]]:
+    vals = obs.get
+    return (
+        int(vals["rows"]),
+        {c: (vals[f"__mn_{c}"], vals[f"__mx_{c}"]) for c in cols},
+    )
 
 
 # ------------------------------------------------------------------------
@@ -1268,6 +1298,9 @@ class VersionedParquetTable(TableStore):
                     entry["bloom"] = c["bloom"]
                 if c.get("partition_by"):
                     entry["partitioned"] = True
+                if c.get("rows") is not None:
+                    entry["rows"] = c["rows"]
+                    entry["minmax"] = c.get("minmax") or {}
                 live.append(entry)
             if c.get("schema"):
                 schema_json = c["schema"]
@@ -1970,6 +2003,7 @@ class VersionedParquetTable(TableStore):
         bloom_cols: Optional[list[str]] = None,
         bloom_bits: Optional[int] = None,  # None = auto-size from rows/file
         identity_col: Optional[str] = None,
+        observed: Optional[tuple[Any, list[str]]] = None,
     ) -> int:
         """Write a DataFrame as one commit; returns the new version
         (reference:odbc2deltalake/reader/spark_reader.py:144-162 Delta sink).
@@ -2018,7 +2052,14 @@ class VersionedParquetTable(TableStore):
         a replayed micro-batch (Spark redelivers the last batch after a
         crash) lands exactly once. On a ``CommitConflictError`` race the
         caller retries; the retry re-reads the marker and skips if the
-        racer was the same (app, version)."""
+        racer was the same (app, version).
+
+        ``observed=(observation, cols)`` is the Observation
+        :meth:`write_counted_minmax` attached to ``df`` (row count plus
+        min/max of ``cols``). The commit records the count as ``rows``
+        and the bounds as ``minmax`` — exact, unlike ``stats`` — which
+        :meth:`max_and_count` answers from. A zero-row append that
+        carries no properties publishes no commit and removes its dir."""
         assert mode in ("append", "overwrite"), mode
         id_obs = None
         id_base = 0
@@ -2163,6 +2204,18 @@ class VersionedParquetTable(TableStore):
                 raise ConstraintViolationError(
                     f"write rejected: CHECK violations {bad}"
                 )
+        counted = None
+        if observed is not None:
+            counted = _observed_count_minmax(*observed)
+            if (
+                counted[0] == 0
+                and mode == "append"
+                and not extra_commit_fields
+                and id_obs is None
+                and self.exists()
+            ):
+                self.backend.remove_recursive(self._path(dir_name))
+                return self.version()
         commit = {
             "version": new_version,
             "mode": mode,
@@ -2172,6 +2225,12 @@ class VersionedParquetTable(TableStore):
         }
         if partition_by:
             commit["partition_by"] = list(partition_by)
+        if counted is not None:
+            commit["rows"] = counted[0]
+            commit["minmax"] = {
+                c: [self._stat_ser(mn), self._stat_ser(mx)]
+                for c, (mn, mx) in counted[1].items()
+            }
         if stats_cols and per_file_stats:
             commit["stats"] = self._footer_file_stats(
                 self._path(dir_name), stats_cols
@@ -3346,6 +3405,16 @@ class VersionedParquetTable(TableStore):
         )
         return summary
 
+    @staticmethod
+    def _to_partitions(df: DataFrame, n: int) -> DataFrame:
+        """``df`` laid out as ``n`` output partitions: ``coalesce`` when
+        the scan has at least ``n`` splits, a round-robin ``repartition``
+        when it underfills (``coalesce`` can only lower the count, which
+        would make the file count depend on the host's scan splits)."""
+        if df.rdd.getNumPartitions() >= n:
+            return df.coalesce(n)
+        return df.repartition(n)
+
     def compact(
         self,
         spark: SparkSession,
@@ -3368,9 +3437,11 @@ class VersionedParquetTable(TableStore):
         The append-only history table accumulates one dir of
         shuffle-partition-count files per load; at 100 TB that is the
         small-files problem (task-per-file scheduling, metadata-bound
-        scans). Output file count is sized from the backend's byte count
-        of the live dirs (``du``; falls back to ``out_partitions``,
-        then to the session's default parallelism). ``zorder_by``
+        scans). The output partition count is ``out_partitions`` when
+        given, else sized from the backend's byte count of the live dirs
+        (``du``), else the session's default parallelism; it is a
+        target, reached by repartitioning when the scan has fewer
+        splits, so it does not depend on the host. ``zorder_by``
         applies `operators.zorder.zorder_layout` to the rewrite so the
         compacted files also carry multi-dimensional clustering —
         Delta's OPTIMIZE ZORDER BY pairing.
@@ -3436,7 +3507,7 @@ class VersionedParquetTable(TableStore):
 
             compacted = zorder_layout(snapshot, zorder_by, out_partitions=n)
         else:
-            compacted = snapshot.coalesce(n)
+            compacted = self._to_partitions(snapshot, n)
         # a Z-ordered rewrite lays rows out so per-file [min, max]
         # intervals on the cluster keys are TIGHT — recording them makes
         # skip_where reads prune inside the compacted commit (default:
@@ -3532,7 +3603,7 @@ class VersionedParquetTable(TableStore):
 
             src = zorder_layout(src, zorder_by, out_partitions=n)
         else:
-            src = src.coalesce(n)
+            src = self._to_partitions(src, n)
         if stats_cols is None:
             sc = {c for c, _, _ in conj} | set(zorder_by or [])
             for d in affected:
@@ -5019,6 +5090,61 @@ class VersionedParquetTable(TableStore):
                     spark, buckets=sorted(touched)
                 ).count()
         return self.read(spark).count()
+
+    def write_counted_minmax(
+        self,
+        df: DataFrame,
+        minmax_cols: list[str],
+        mode: str = "append",
+        merge_schema: bool = False,
+        known_stats: Optional[dict[str, tuple[Any, Any]]] = None,
+    ) -> tuple[int, int, dict[str, tuple[Any, Any]]]:
+        """:meth:`TableStore.write_counted_minmax`; the commit also
+        records the observed count and bounds (see ``observed`` on
+        :meth:`write`), and a zero-row append commits nothing."""
+        cols = [c for c in minmax_cols if c in df.columns]
+        df, obs = _observe_count_minmax(df, cols)
+        v = self.write(
+            df,
+            mode=mode,
+            merge_schema=merge_schema,
+            known_stats=known_stats,
+            observed=(obs, cols),
+        )
+        return (v, *_observed_count_minmax(obs, cols))
+
+    def max_and_count(
+        self, spark: SparkSession, col: Optional[str]
+    ) -> tuple[Any, int]:
+        """(MAX(col), COUNT(*)) from commit metadata — zero jobs — when
+        every live dir carries the ``rows``/``minmax`` a counted write
+        recorded for an integral ``col``. Dirs are immutable and every
+        rewrite (merge, fold, DML, compaction) records fresh entries
+        without the fields, so the numbers can never go stale; patches
+        and masks change rows without a new dir, so they fall back to
+        the scan, as does anything else the metadata cannot answer."""
+        st = self._state_at()
+        dirs = st["dirs"]
+        schema = T.StructType.fromJson(json.loads(st["schema"]))
+        if (
+            not st["patches"]
+            and not st["masks"]
+            and all("rows" in d for d in dirs)
+            and (
+                col is None
+                or (
+                    # integral only: other types' bounds round-trip through
+                    # the commit JSON and need not compare equal to a scan's
+                    col in schema.fieldNames()
+                    and isinstance(schema[col].dataType, T.IntegralType)
+                    and all(col in d["minmax"] for d in dirs)
+                )
+            )
+        ):
+            tops = [d["minmax"][col][1] for d in dirs] if col else []
+            tops = [t for t in tops if t is not None]
+            return (max(tops) if tops else None), sum(d["rows"] for d in dirs)
+        return super().max_and_count(spark, col)
 
     # ---------- merge ----------
 

@@ -743,3 +743,87 @@ def test_ci_collation_keyset_join_stays_byte_exact():
     got = con.sql(ducked).fetchall()
     ks = {r[0] for r in got}
     assert ks == {"Alice"}, (ducked, got)
+
+
+# ------------------------------------------- parquet footer watermark probe --
+
+
+def _probe(spark, src, col):
+    """(footer-or-scan answer, jobs it ran, the scan answer)."""
+    from odbc2deltalake_spark.sources.base import Source
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    src.col_infos(spark)  # the load's analyze phase resolves the schema first
+    j0 = sched.nextJobId()
+    got = src.max_and_count(spark, col)
+    jobs = sched.nextJobId() - j0
+    return got, jobs, Source.max_and_count(src, spark, col)
+
+
+def test_parquet_probe_reads_footers_of_an_integral_column(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from odbc2deltalake_spark import ParquetTableSource
+
+    p = str(tmp_path / "s.parquet")
+    rv = [(i * 7919) % 1000 for i in range(1000)]  # max not in the last group
+    pq.write_table(pa.table({"id": list(range(1000)), "rv": rv}), p, row_group_size=128)
+    assert pq.ParquetFile(p).metadata.num_row_groups == 8
+    got, jobs, scan = _probe(spark, ParquetTableSource(p), "rv")
+    assert got == scan == (999, 1000) and jobs == 0
+    got, jobs, scan = _probe(spark, ParquetTableSource(p), None)
+    assert got == scan == (None, 1000) and jobs == 0
+
+
+def test_parquet_probe_falls_back_to_the_scan(spark, tmp_path):
+    """Every case the footers cannot answer exactly scans, and agrees."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from odbc2deltalake_spark import ParquetTableSource
+
+    # nullable delta column with an all-NULL row group: no min/max there
+    p = str(tmp_path / "nulls.parquet")
+    rv = [None] * 100 + list(range(100))
+    pq.write_table(pa.table({"id": list(range(200)), "rv": pa.array(rv, pa.int64())}), p, row_group_size=100)
+    got, jobs, scan = _probe(spark, ParquetTableSource(p), "rv")
+    assert got == scan == (99, 200) and jobs > 0
+
+    # binary rowversion column
+    p = str(tmp_path / "bin.parquet")
+    rv = [i.to_bytes(8, "big") for i in range(50)]
+    pq.write_table(pa.table({"id": list(range(50)), "rv": rv}), p)
+    src = ParquetTableSource(p, type_strs={"rv": "rowversion"})
+    got, jobs, scan = _probe(spark, src, "rv")
+    assert got == scan and got[1] == 50 and jobs > 0
+
+    # a directory of files, plain and hive-partitioned
+    df = spark.range(300).selectExpr("id", "id * 3 as rv", "id % 3 as part")
+    for name, writer in (("dir", df.write), ("hive", df.write.partitionBy("part"))):
+        p = str(tmp_path / name)
+        writer.parquet(p)
+        got, jobs, scan = _probe(spark, ParquetTableSource(p), "rv")
+        assert got == scan == (897, 300) and jobs > 0
+
+
+def test_parquet_source_schema_follows_file_changes(spark, tmp_path):
+    """The inferred schema is reused across reads until a file changes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from odbc2deltalake_spark import ParquetTableSource
+
+    p = str(tmp_path / "s.parquet")
+    pq.write_table(pa.table({"id": [1, 2]}), p)
+    src = ParquetTableSource(p)
+    assert [c.column_name for c in src.col_infos(spark)] == ["id"]
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    src.col_infos(spark)
+    src.read(spark)
+    assert sched.nextJobId() == j0  # no second inference
+    pq.write_table(pa.table({"id": [1, 2, 3], "rv": [4, 5, 6]}), p)
+    assert [c.column_name for c in src.col_infos(spark)] == ["id", "rv"]
+    assert src.read(spark).count() == 3
+    assert src.max_and_count(spark, "rv") == (6, 3)

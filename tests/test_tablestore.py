@@ -1350,3 +1350,50 @@ def test_delta_check_constraint_grammar_property():
             assert g == w, (g, w)
 
     run()
+
+
+def test_max_and_count_from_commit_metadata(spark, tmp_path):
+    """Counted writes record the row count and exact bounds on their
+    commit; max_and_count answers from them with zero jobs and equals the
+    scan answer after every operation. Operations that leave a dir's
+    recorded numbers stale (masks, patches) or rewrite dirs without
+    recording (compact, merges, plain writes) fall back to the scan."""
+    from odbc2deltalake_spark.tablestore import TableStore
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    t = VersionedParquetTable(tmp_path / "t")
+
+    def check(from_metadata):
+        j0 = sched.nextJobId()
+        got = t.max_and_count(spark, "id")
+        jobs = sched.nextJobId() - j0
+        assert got == TableStore.max_and_count(t, spark, "id")
+        assert (jobs == 0) == from_metadata, jobs
+
+    t.write_counted_minmax(_df(spark, [(i, "a") for i in range(10)]), ["id"], mode="overwrite")
+    check(True)
+    assert t.max_and_count(spark, None) == (None, 10)
+    v1, n, _ = t.write_counted_minmax(_df(spark, [(42, "b")]), ["id"], mode="append")
+    assert n == 1
+    check(True)
+    v = t.version()
+    assert t.write_counted_minmax(_df(spark, []), ["id"], mode="append") == (v, 0, {"id": (None, None)})
+    assert t.version() == v  # a zero-row counted append commits nothing
+    t.checkpoint()
+    check(True)
+    t.write(_df(spark, [(7, "c")]), mode="append")  # uncounted dir
+    check(False)
+    t.restore(v1)  # the restored dirs carry their recorded numbers
+    check(True)
+    t.delete_where(spark, ("id", "=", 42), lazy=True)  # mask
+    check(False)
+    t.fold_masks(spark)
+    check(False)
+    t.write_counted_minmax(_df(spark, [(i, "d") for i in range(5)]), ["id"], mode="overwrite")
+    t.write_counted_minmax(_df(spark, [(9, "e")]), ["id"], mode="append")
+    t.compact(spark, out_partitions=1)
+    check(False)
+    t.merge_upsert(spark, _df(spark, [(3, "f"), (99, "g")]), ["id"], num_buckets=4)
+    t.merge_upsert(spark, _df(spark, [(98, "h")]), ["id"], strategy="patch")
+    assert t._state_at()["patches"]
+    check(False)
