@@ -118,6 +118,7 @@ class DeltaTableStore(TableStore):
         bloom_cols: Optional[list] = None,  # Delta: use the native
         bloom_bits: Optional[int] = None,   # delta.bloomFilter.* props
         identity_col: Optional[str] = None,
+        observed: Optional[tuple] = None,  # Delta keeps its own counts
     ) -> int:
         assert mode in ("append", "overwrite"), mode
         if bloom_cols is not None:

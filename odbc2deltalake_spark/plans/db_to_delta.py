@@ -106,9 +106,7 @@ class _Ctx:
         out = convert_projection(df, self.cols, self.target_name, self.cfg.no_trim)
         return self.cfg.transformation_hook(out, "sql2delta")
 
-    def append_history(
-        self, df: DataFrame, delta_interval=None, counted: bool = False
-    ) -> None:
+    def append_history(self, df: DataFrame, delta_interval=None) -> None:
         """Append to the SCD2 history with drift-aware schema merging
         (type widening flows through; reference Delta equivalent:
         mergeSchema + delta.enableTypeWidening,
@@ -124,9 +122,10 @@ class _Ctx:
         strange updates) are simply never pruned — skipping is
         conservative by construction.
 
-        ``counted`` counts the rows as they are written, so a batch the
-        caller cannot size in advance needs no emptiness probe: a
-        zero-row append publishes no commit."""
+        The append counts its rows as they are written; on a store
+        without ``commits_empty_appends`` a zero-row append publishes no
+        commit, so a batch the caller cannot size in advance needs no
+        emptiness probe."""
         known = {SYS.timestamp: (self.load_ts, self.load_ts)}
         if (
             delta_interval is not None
@@ -139,15 +138,13 @@ class _Ctx:
         # constant the engine already holds, so the commit interval is
         # exact without any stats job — watermark/latest-load reads then
         # prune whole older commits at the commit log
-        kw = dict(
+        self.dest.delta.write_counted_minmax(
+            df,
+            [],
             mode="append",
             merge_schema=self.cfg.allow_schema_drift in (True, "new_only"),
             known_stats=known,
         )
-        if counted:
-            self.dest.delta.write_counted_minmax(df, [], **kw)
-        else:
-            self.dest.delta.write(df, **kw)
 
 
 def _resolve_cols(
@@ -763,6 +760,10 @@ def _do_deletes(ctx: _Ctx, old_pk_version: int) -> None:
     )
     old_lpk = dest.latest_pk_version.read(ctx.spark, version=old_pk_version)
     dels = deletes_keys(old_lpk, current, ctx.pk_names)
+    # a store that would commit a zero-row append as an empty version
+    # keeps the emptiness probe; the others drop the empty append itself
+    if dest.delta.commits_empty_appends and dels.isEmpty():
+        return
     schema = {f.name: f.dataType for f in dest.delta_1.schema().fields}
     tombs = tombstone_projection(
         dels,
@@ -774,7 +775,7 @@ def _do_deletes(ctx: _Ctx, old_pk_version: int) -> None:
     # one pass: the append counts its rows, and with none (the usual
     # load) it commits nothing — no separate emptiness job re-running
     # the anti-join cascade
-    ctx.append_history(tombs, counted=True)
+    ctx.append_history(tombs)
 
 
 # ------------------------------------------------------------- watermarks --

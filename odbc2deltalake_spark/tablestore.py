@@ -449,6 +449,12 @@ class TableStore(ABC):
     this interface.
     """
 
+    #: whether a counted append of zero rows (:meth:`write_counted_minmax`)
+    #: still commits an empty version. A store that cannot withdraw a
+    #: written commit says True, and callers that cannot size a batch
+    #: in advance probe its emptiness before appending.
+    commits_empty_appends: bool = True
+
     @abstractmethod
     def exists(self) -> bool: ...
 
@@ -492,11 +498,14 @@ class TableStore(ABC):
         bloom_cols: Optional[list[str]] = None,
         bloom_bits: Optional[int] = None,  # None = auto-size from rows/file
         identity_col: Optional[str] = None,
+        observed: Optional[tuple[Any, list[str]]] = None,
     ) -> int:
-        """Write one commit. The stats/commit-field parameters are
-        data-skipping and audit metadata hints: a store without its own
-        stats machinery MUST accept and may ignore them (Delta collects
-        native file stats, so its implementation treats them as no-ops);
+        """Write one commit. The stats/commit-field parameters (and
+        ``observed``, the row-count Observation :meth:`write_counted_minmax`
+        attached to ``df``) are data-skipping and audit metadata hints: a
+        store without its own stats machinery MUST accept and may ignore
+        them (Delta collects native file stats, so its implementation
+        treats them as no-ops);
         ignoring ``skip_where``'s pruning half is always safe because
         the read applies the residual predicate.
 
@@ -594,13 +603,18 @@ class TableStore(ABC):
         write, which the A/B in :meth:`VersionedParquetTable.write`'s
         docstring measured at ~1.2s/load). The SCD2 engine uses this on
         its change-set writes and feeds the bounds forward as
-        ``known_stats`` on the history append. Here a zero-row append
-        still commits (an empty version); the commit-log store
-        overrides this to publish nothing."""
+        ``known_stats`` on the history append. The Observation is handed
+        to :meth:`write` as ``observed``: a store that records it keeps
+        the count and bounds on the commit, and a zero-row append commits
+        an empty version only where ``commits_empty_appends``."""
         cols = [c for c in minmax_cols if c in df.columns]
         df, obs = _observe_count_minmax(df, cols)
         v = self.write(
-            df, mode=mode, merge_schema=merge_schema, known_stats=known_stats
+            df,
+            mode=mode,
+            merge_schema=merge_schema,
+            known_stats=known_stats,
+            observed=(obs, cols),
         )
         return (v, *_observed_count_minmax(obs, cols))
 
@@ -682,6 +696,9 @@ def _relax_nullability(dt: T.DataType) -> T.DataType:
 
 
 class VersionedParquetTable(TableStore):
+    # a zero-row counted append removes its dir before the commit
+    commits_empty_appends = False
+
     def __init__(self, root: str | Path, backend: Optional[StorageBackend] = None):
         self.root = Path(root) if not isinstance(root, Path) else root
         self._root_str = str(root)
@@ -3406,14 +3423,17 @@ class VersionedParquetTable(TableStore):
         return summary
 
     @staticmethod
-    def _to_partitions(df: DataFrame, n: int) -> DataFrame:
-        """``df`` laid out as ``n`` output partitions: ``coalesce`` when
-        the scan has at least ``n`` splits, a round-robin ``repartition``
-        when it underfills (``coalesce`` can only lower the count, which
-        would make the file count depend on the host's scan splits)."""
-        if df.rdd.getNumPartitions() >= n:
-            return df.coalesce(n)
-        return df.repartition(n)
+    def _to_partitions(df: DataFrame, n: int, target: bool) -> DataFrame:
+        """``df`` laid out as at most ``n`` output partitions by a narrow
+        ``coalesce``. A ``target`` count (the caller's explicit
+        ``out_partitions``) is reached exactly: a round-robin
+        ``repartition`` fills it when the scan has fewer splits, since
+        ``coalesce`` alone would make the file count depend on the
+        host's scan splits. A size-derived ``n`` stays a cap, so the
+        default compaction shuffles nothing."""
+        if target and df.rdd.getNumPartitions() < n:
+            return df.repartition(n)
+        return df.coalesce(n)
 
     def compact(
         self,
@@ -3437,11 +3457,12 @@ class VersionedParquetTable(TableStore):
         The append-only history table accumulates one dir of
         shuffle-partition-count files per load; at 100 TB that is the
         small-files problem (task-per-file scheduling, metadata-bound
-        scans). The output partition count is ``out_partitions`` when
-        given, else sized from the backend's byte count of the live dirs
-        (``du``), else the session's default parallelism; it is a
-        target, reached by repartitioning when the scan has fewer
-        splits, so it does not depend on the host. ``zorder_by``
+        scans). An explicit ``out_partitions`` is the output file count,
+        reached by repartitioning when the scan has fewer splits, so it
+        does not depend on the host. Without it the count is capped by
+        the backend's byte count of the live dirs (``du``), else by the
+        session's default parallelism, and reached by a narrow
+        ``coalesce``. ``zorder_by``
         applies `operators.zorder.zorder_layout` to the rewrite so the
         compacted files also carry multi-dimensional clustering —
         Delta's OPTIMIZE ZORDER BY pairing.
@@ -3507,7 +3528,9 @@ class VersionedParquetTable(TableStore):
 
             compacted = zorder_layout(snapshot, zorder_by, out_partitions=n)
         else:
-            compacted = self._to_partitions(snapshot, n)
+            compacted = self._to_partitions(
+                snapshot, n, target=out_partitions is not None
+            )
         # a Z-ordered rewrite lays rows out so per-file [min, max]
         # intervals on the cluster keys are TIGHT — recording them makes
         # skip_where reads prune inside the compacted commit (default:
@@ -3603,7 +3626,9 @@ class VersionedParquetTable(TableStore):
 
             src = zorder_layout(src, zorder_by, out_partitions=n)
         else:
-            src = self._to_partitions(src, n)
+            src = self._to_partitions(
+                src, n, target=out_partitions is not None
+            )
         if stats_cols is None:
             sc = {c for c, _, _ in conj} | set(zorder_by or [])
             for d in affected:
@@ -5090,28 +5115,6 @@ class VersionedParquetTable(TableStore):
                     spark, buckets=sorted(touched)
                 ).count()
         return self.read(spark).count()
-
-    def write_counted_minmax(
-        self,
-        df: DataFrame,
-        minmax_cols: list[str],
-        mode: str = "append",
-        merge_schema: bool = False,
-        known_stats: Optional[dict[str, tuple[Any, Any]]] = None,
-    ) -> tuple[int, int, dict[str, tuple[Any, Any]]]:
-        """:meth:`TableStore.write_counted_minmax`; the commit also
-        records the observed count and bounds (see ``observed`` on
-        :meth:`write`), and a zero-row append commits nothing."""
-        cols = [c for c in minmax_cols if c in df.columns]
-        df, obs = _observe_count_minmax(df, cols)
-        v = self.write(
-            df,
-            mode=mode,
-            merge_schema=merge_schema,
-            known_stats=known_stats,
-            observed=(obs, cols),
-        )
-        return (v, *_observed_count_minmax(obs, cols))
 
     def max_and_count(
         self, spark: SparkSession, col: Optional[str]

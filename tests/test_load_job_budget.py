@@ -28,7 +28,7 @@ from odbc2deltalake_spark.plans.db_to_delta import (
     NoLoadResult,
     read_current_rows,
 )
-from odbc2deltalake_spark.tablestore import TableStore
+from odbc2deltalake_spark.tablestore import TableStore, VersionedParquetTable
 
 NOOP_BUDGET = 2
 DELTA_BUDGET = 20
@@ -142,6 +142,32 @@ def test_zero_delete_load_commits_no_tombstones(spark, tmp_path, loaded):
     assert hist.version() == v0 + 1
     assert len(_data_dirs(dest) - dirs0) == 1
     assert hist.read(spark).filter("__is_deleted").count() == 0
+
+
+def test_store_that_commits_empty_appends_keeps_the_probe(
+    spark, tmp_path, loaded, monkeypatch
+):
+    """A store that would commit a zero-row append as an empty version
+    (Delta cannot withdraw a written commit) keeps the emptiness probe:
+    a zero-delete load makes no tombstone append there at all."""
+    table, dest = loaded
+    hist = DeltaDestination(dest).delta
+    monkeypatch.setattr(VersionedParquetTable, "commits_empty_appends", True)
+    appends = []
+    real = TableStore.write_counted_minmax
+
+    def spy(self, df, minmax_cols, mode="append", **kw):
+        if mode == "append" and self._root_str == hist._root_str:
+            appends.append(df)
+        return real(self, df, minmax_cols, mode=mode, **kw)
+
+    monkeypatch.setattr(TableStore, "write_counted_minmax", spy)
+    v0 = hist.version()
+    table.change(update=[7], insert=[400])
+    res, _ = _load(spark, table.write(str(tmp_path / "s2.parquet")), dest)
+    assert isinstance(res, DeltaLoadResult) and not res.dirty
+    assert len(appends) == 1  # the change set; no tombstone append
+    assert hist.version() == v0 + 1
 
 
 def test_delete_bearing_load_lands_tombstones(spark, tmp_path, loaded):
