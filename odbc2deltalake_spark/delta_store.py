@@ -588,16 +588,15 @@ class DeltaTableStore(TableStore):
         extra_commit_fields: Optional[dict] = None,
         delete_keys: Optional[DataFrame] = None,
         strategy: str = "rewrite",
-        batch_rows_hint: Optional[int] = None,
     ) -> int:
         """Delta MERGE (reference:odbc2deltalake/reader/spark_reader.py:329-350):
         Delta rewrites only files containing matched keys — the same
         asymptotics the parquet store gets from hash bucketing, so the
         bucketing params are ignored here.
 
-        ``strategy`` / ``batch_rows_hint`` (the parquet store's
-        merge-on-read routing) are ACCEPTED and ignored: Delta picks
-        copy-on-write vs deletion-vector merge-on-read itself via the
+        ``strategy`` (the parquet store's merge-on-read routing) is
+        ACCEPTED and ignored: Delta picks copy-on-write vs
+        deletion-vector merge-on-read itself via the
         ``delta.enableDeletionVectors`` table property, which is the
         native home for that decision — callers stay polymorphic across
         store implementations. ``delete_keys`` maps to

@@ -166,14 +166,17 @@ def _fit_logreg_driver(
     import numpy as np
 
     d = n_buckets + 3
+    # a NULL feats array adds no gradient term, as the loop's explode
+    # drops it; its row still counts in n
+    feats = [r["feats"] or [] for r in rows]
     row_idx = np.concatenate(
-        [np.full(len(r["feats"]), i, dtype=np.int64) for i, r in enumerate(rows)]
+        [np.full(len(f), i, dtype=np.int64) for i, f in enumerate(feats)]
     )
     b_idx = np.concatenate(
-        [np.asarray([s["b"] for s in r["feats"]], dtype=np.int64) for r in rows]
+        [np.asarray([s["b"] for s in f], dtype=np.int64) for f in feats]
     )
     c_val = np.concatenate(
-        [np.asarray([s["c"] for s in r["feats"]], dtype=np.float64) for r in rows]
+        [np.asarray([s["c"] for s in f], dtype=np.float64) for f in feats]
     )
     y = np.asarray([float(r["label"]) for r in rows], dtype=np.float64)
     w = np.zeros(d)

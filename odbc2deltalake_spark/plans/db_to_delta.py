@@ -473,8 +473,7 @@ def do_delta_load(ctx: _Ctx, simple: bool = False, simple_check: bool = False) -
             f_pre.result()
             f_hist.result()
         return _finish_simple(
-            ctx, res, src_count, simple_check, delta_rows=n1,
-            prefix_done=True,
+            ctx, res, src_count, simple_check, delta_rows=n1
         )
 
     # steps 1 and 2 touch disjoint tables (primary_keys_ts vs delta_1 +
@@ -577,43 +576,34 @@ def _finish_simple(
     res: DeltaLoadResult,
     src_count: int,
     simple_check: bool,
-    delta_rows: Optional[int] = None,
-    prefix_done: bool = False,
+    delta_rows: int,
 ) -> LoadResult:
-    """Simple-delta tail: merge delta_1 keys into latest_pk, drop the
-    snapshot, count-check, optionally escalate
-    (reference:odbc2deltalake/db_to_delta.py:659-691). ``prefix_done``:
-    the caller already ran _finish_simple_prefix (r14 overlap)."""
+    """Simple-delta tail: merge delta_1 keys into latest_pk, count-check,
+    optionally escalate (reference:odbc2deltalake/db_to_delta.py:659-691).
+    The caller has already run _finish_simple_prefix (r14 overlap).
+    ``delta_rows``: delta_1's row count, observed at write time."""
     dest = ctx.dest
     assert ctx.delta_name is not None
-    if not prefix_done:
-        _finish_simple_prefix(ctx)
-    merged = latest_pk_union(
-        None,
-        dest.delta_1.read(ctx.spark),
-        None,
-        ctx.pk_names,
-        ctx.delta_name,
-    )
-    # write-optimized merge: the keys index is written every load and
-    # read rarely (bucket probes, counts), so merge-on-read fits — a
-    # small delta commits as one O(|batch|) patch dir instead of
-    # rewriting every bucket its uniformly-hashed keys touch; the auto
-    # bounds fold the chain back into the bucketized base before
-    # read-side reconciliation cost can accumulate
-    dest.latest_pk_version.merge_upsert(
-        ctx.spark,
-        merged,
-        ctx.pk_names,
-        strategy="auto",
-        # delta_1's exact row count was observed at write time;
-        # latest-per-pk of it can only be smaller, so the auto fraction
-        # decision needs no extra count job (None → merge counts once)
-        batch_rows_hint=delta_rows,
-    )
-    # count reconcile: metadata-backed when unpatched (zero jobs); with
-    # an outstanding patch chain only the patch-touched buckets are
-    # count-read — cost scales with the delta, not the index
+    if delta_rows or not dest.latest_pk_version.exists():
+        # merge-on-write: the index is merged once per load and folded
+        # never. A merge-on-read patch pays off only when one fold
+        # covers many writes, but the post-load maintenance window
+        # folds after every load, so a patch here would be written,
+        # count-reconciled and rewritten back in the same load. An
+        # empty delta_1 (a redelivered micro-batch) changes no key, so
+        # an existing index keeps its version.
+        dest.latest_pk_version.merge_upsert(
+            ctx.spark,
+            latest_pk_union(
+                None,
+                dest.delta_1.read(ctx.spark),
+                None,
+                ctx.pk_names,
+                ctx.delta_name,
+            ),
+            ctx.pk_names,
+        )
+    # count reconcile: from the merge's bucket_rows metadata, zero jobs
     target_count = dest.latest_pk_version.count_rows(ctx.spark)
     res.dirty = src_count != target_count
     if res.dirty:

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from odbc2deltalake_spark.metadata import ColInfo
+from odbc2deltalake_spark.parquet_footers import footer_max_and_count
 from odbc2deltalake_spark.sources.base import Source
 
 
@@ -90,32 +91,9 @@ class ParquetTableSource(Source):
         Falls back to the scan unless the delta column is a signed
         integer with min/max statistics in every row group (an all-NULL
         row group has none)."""
-        got = self._footer_max_and_count(delta_col)
+        got = (
+            footer_max_and_count([self.path], delta_col)
+            if Path(self.path).is_file()
+            else None
+        )
         return got if got is not None else super().max_and_count(spark, delta_col)
-
-    def _footer_max_and_count(
-        self, delta_col: Optional[str]
-    ) -> Optional[tuple[Any, int]]:
-        if not Path(self.path).is_file():
-            return None
-        try:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            pf = pq.ParquetFile(self.path)
-        except (ImportError, OSError, ValueError):
-            return None
-        md = pf.metadata
-        if delta_col is None:
-            return None, md.num_rows
-        idx = pf.schema_arrow.get_field_index(delta_col)
-        if idx < 0 or not pa.types.is_signed_integer(pf.schema_arrow.field(idx).type):
-            return None
-        leaf = next(i for i in range(md.num_columns) if md.schema.column(i).path == delta_col)
-        top = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(leaf).statistics
-            if st is None or not st.has_min_max:
-                return None
-            top = st.max if top is None else max(top, st.max)
-        return top, md.num_rows

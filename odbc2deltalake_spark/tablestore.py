@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from odbc2deltalake_spark.parquet_footers import footer_max_and_count
+
 
 class TableNotFoundError(Exception):
     pass
@@ -5119,35 +5121,75 @@ class VersionedParquetTable(TableStore):
     def max_and_count(
         self, spark: SparkSession, col: Optional[str]
     ) -> tuple[Any, int]:
-        """(MAX(col), COUNT(*)) from commit metadata — zero jobs — when
-        every live dir carries the ``rows``/``minmax`` a counted write
-        recorded for an integral ``col``. Dirs are immutable and every
-        rewrite (merge, fold, DML, compaction) records fresh entries
-        without the fields, so the numbers can never go stale; patches
-        and masks change rows without a new dir, so they fall back to
-        the scan, as does anything else the metadata cannot answer."""
+        """(MAX(col), COUNT(*)) of the current snapshot with zero jobs
+        where metadata can answer it, for an integral ``col`` (other
+        types' bounds round-trip through the commit JSON or the footer
+        and need not compare equal to a scan's):
+
+        1. from the commit log, when every live dir carries the
+           ``rows``/``minmax`` a counted write recorded. Dirs are
+           immutable and every rewrite (merge, fold, DML, compaction)
+           records fresh entries without the fields, so the numbers can
+           never go stale;
+        2. else from the live dirs' parquet footers (row counts and the
+           largest row-group max), on a local backend when every dir's
+           written schema carries ``col``.
+
+        Patches and masks change rows without a new dir, so they fall
+        back to the scan, as does anything else neither source can
+        answer (see :func:`footer_max_and_count`)."""
         st = self._state_at()
         dirs = st["dirs"]
         schema = T.StructType.fromJson(json.loads(st["schema"]))
         if (
             not st["patches"]
             and not st["masks"]
-            and all("rows" in d for d in dirs)
             and (
                 col is None
                 or (
-                    # integral only: other types' bounds round-trip through
-                    # the commit JSON and need not compare equal to a scan's
                     col in schema.fieldNames()
                     and isinstance(schema[col].dataType, T.IntegralType)
-                    and all(col in d["minmax"] for d in dirs)
                 )
             )
         ):
-            tops = [d["minmax"][col][1] for d in dirs] if col else []
-            tops = [t for t in tops if t is not None]
-            return (max(tops) if tops else None), sum(d["rows"] for d in dirs)
+            if all(
+                "rows" in d and (col is None or col in d["minmax"]) for d in dirs
+            ):
+                tops = [d["minmax"][col][1] for d in dirs] if col else []
+                tops = [t for t in tops if t is not None]
+                return (max(tops) if tops else None), sum(d["rows"] for d in dirs)
+            files = self._live_data_files(dirs, col)
+            got = footer_max_and_count(files, col) if files is not None else None
+            if got is not None:
+                return got
         return super().max_and_count(spark, col)
+
+    def _live_data_files(
+        self, dirs: list[dict[str, Any]], col: Optional[str]
+    ) -> Optional[list[str]]:
+        """The data files a scan of ``dirs`` reads, skipping the names a
+        Spark file listing hides (``_``/``.`` prefixes, except ``_k=v``
+        partition dirs). None on a non-local backend, for a missing dir,
+        or when a dir's written schema lacks ``col`` (a scan reads NULL
+        there, while a physically present column would answer values)."""
+        if not isinstance(self.backend, LocalStorageBackend):
+            return None
+        out: list[str] = []
+        for d in dirs:
+            if col is not None and col not in T.StructType.fromJson(
+                json.loads(d["schema"])
+            ).fieldNames():
+                return None
+            root = Path(self._path(d["dir"]))
+            if not root.is_dir():
+                return None
+            for f in root.rglob("*"):
+                if f.is_file() and not any(
+                    p.startswith(".") or (p.startswith("_") and "=" not in p)
+                    for p in f.relative_to(root).parts
+                ):
+                    out.append(str(f))
+        return out
 
     # ---------- merge ----------
 
@@ -5298,7 +5340,6 @@ class VersionedParquetTable(TableStore):
         extra_commit_fields: Optional[dict[str, Any]] = None,
         delete_keys: Optional[DataFrame] = None,
         strategy: str = "rewrite",
-        batch_rows_hint: Optional[int] = None,
     ) -> int:
         """MERGE on key equality: whenMatchedUpdateAll /
         whenNotMatchedInsertAll (reference:odbc2deltalake/reader/spark_reader.py:329-350),
@@ -5423,7 +5464,6 @@ class VersionedParquetTable(TableStore):
                 if strategy != "rewrite" and self._patch_route(
                     spark, source, key_cols, st, delete_keys,
                     forced=strategy == "patch",
-                    batch_rows_hint=batch_rows_hint,
                 ):
                     return self._write_patch(
                         spark, source, delete_keys, key_cols, st,
@@ -5544,15 +5584,12 @@ class VersionedParquetTable(TableStore):
         st: dict[str, Any],
         delete_keys: Optional[DataFrame],
         forced: bool,
-        batch_rows_hint: Optional[int] = None,
     ) -> bool:
         """Decide patch vs rewrite for an eligible merge. ``forced``
         (strategy="patch") only validates the hard requirements and
         raises when they don't hold; "auto" additionally applies the
-        chain/fraction bounds (one delta-sized count job — skipped when
-        the caller passes ``batch_rows_hint``, any UPPER bound on the
-        batch size: the bound only ever steers toward the rewrite
-        fallback, never past it) and falls back to rewrite quietly."""
+        chain/fraction bounds (one delta-sized count job) and falls back
+        to rewrite quietly."""
         tbl_cols = {f["name"] for f in json.loads(st["schema"])["fields"]}
         extra = (
             sorted(set(source.columns) - tbl_cols)
@@ -5581,12 +5618,9 @@ class VersionedParquetTable(TableStore):
         if table_rows < self.PATCH_MIN_TABLE_ROWS:
             return False  # rewrite is the cheap path on a small table
         chain_rows = sum(int(p.get("rows") or 0) for p in st["patches"])
-        if batch_rows_hint is not None:
-            batch = int(batch_rows_hint)
-        else:
-            batch = source.count() if source is not None else 0
-            if delete_keys is not None:
-                batch += delete_keys.count()
+        batch = source.count() if source is not None else 0
+        if delete_keys is not None:
+            batch += delete_keys.count()
         return chain_rows + batch <= self.PATCH_MAX_FRACTION * table_rows
 
     def _write_patch(
@@ -5801,6 +5835,18 @@ class VersionedParquetTable(TableStore):
                 how="left_anti",
             )
         merged = source.unionByName(keep, allowMissingColumns=True)
+        if (
+            not touched
+            and not extra_commit_fields
+            and _relax_nullability(merged.schema)
+            == _relax_nullability(T.StructType.fromJson(json.loads(st["schema"])))
+        ):
+            # empty source, no delete keys, no patch chain and no schema
+            # change: nothing to rewrite, so no version to publish (as
+            # merge_delete_keys). Extra commit fields still commit: a
+            # caller may record a marker on the merge commit (a view's
+            # exactly-once token).
+            return st["version"]
         return self._write_bucketized(
             merged, key_cols, nb, replace=touched, key_types=key_types,
             extra_commit_fields=extra_commit_fields,

@@ -208,6 +208,28 @@ def test_driver_fast_path_matches_distributed_loop(fixture):
         assert got == pytest.approx(want, abs=1e-9)
 
 
+@pytest.mark.parametrize("optimizer", ["gd", "adagrad"])
+# tol=0.1 stops both optimizers before STEPS on this fixture
+@pytest.mark.parametrize("tol", [0.0, 0.1])
+def test_driver_fast_path_matches_loop_with_null_feats(fixture, optimizer, tol):
+    """A NULL ``feats`` array adds no gradient term in the distributed
+    loop (its explode drops the row) while the row still counts in n;
+    the driver fast path must do the same instead of raising. Pinned
+    for both optimizers, with and without the early stop."""
+    features, _, _, _ = fixture
+    null_row = features.limit(1).select(
+        (F.col("doc_id") + 10**9).alias("doc_id"),
+        "label",
+        F.lit(None).cast(features.schema["feats"].dataType).alias("feats"),
+    )
+    with_null = features.unionByName(null_row).localCheckpoint(eager=True)
+    kw = dict(steps=STEPS, lr=LR, tol=tol, optimizer=optimizer)
+    fast = fit_logreg(with_null, D, **kw)
+    loop = fit_logreg(with_null, D, driver_cell_cap=0, **kw)
+    for got, want in zip(fast, loop):
+        assert got == pytest.approx(want, abs=1e-9)
+
+
 def test_driver_cap_is_a_hard_bound(fixture):
     """One cell past the cap must take the distributed loop (the 100 TB
     path): capping at exactly n*(D+3)-1 falls back, n*(D+3) does not."""

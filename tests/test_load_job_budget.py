@@ -181,3 +181,65 @@ def test_delete_bearing_load_lands_tombstones(spark, tmp_path, loaded):
     dead = hist.read(spark).filter("__is_deleted").select("id").collect()
     assert sorted(r["id"] for r in dead) == [20, 21, 22]
     assert {r[0] for r in _current(spark, dest)} == set(table.rows)
+
+
+STREAM_BATCH_BUDGET = 13
+STREAM_REDELIVERY_BUDGET = 6
+
+
+def _batch(spark, table: _Rows, ids, path: str):
+    """A micro-batch of ``table``'s current rows for ``ids``, read back
+    from a parquet file as a file stream would deliver it."""
+    ids = sorted(ids)
+    pq.write_table(
+        pa.table(
+            {
+                "id": pa.array(ids, pa.int64()),
+                "val": [table.rows[i][0] for i in ids],
+                "rv": pa.array([table.rows[i][1] for i in ids], pa.int64()),
+            }
+        ),
+        path,
+    )
+    return spark.read.parquet(path)
+
+
+def test_stream_batch_merges_the_key_index_once(spark, tmp_path, monkeypatch):
+    """A warm ``foreach_batch_scd2`` micro-batch writes the
+    ``latest_pk_version`` change once: one merge commit, no merge-on-read
+    patch for the post-load maintenance to fold back. Its at-least-once
+    redelivery finds every row loaded and commits nothing to the index or
+    the history. The patch threshold is lowered to one row so that a
+    small index would take the patch route if the load asked for it."""
+    from odbc2deltalake_spark.streaming.driver import foreach_batch_scd2
+
+    monkeypatch.setattr(VersionedParquetTable, "PATCH_MIN_TABLE_ROWS", 1)
+    dest = str(tmp_path / "dest")
+    apply = foreach_batch_scd2(dest, ["id"], "rv")
+    table = _Rows(300)
+    apply(_batch(spark, table, table.rows, str(tmp_path / "b0.parquet")), 0)
+    table.change(update=[5], insert=[301])  # the first merge bucketizes
+    apply(_batch(spark, table, [5, 301], str(tmp_path / "b1.parquet")), 1)
+
+    d = DeltaDestination(dest)
+    lpk, hist = d.latest_pk_version, d.delta
+    table.change(update=[1, 2, 3], insert=[302, 303])
+    batch = _batch(spark, table, [1, 2, 3, 302, 303], str(tmp_path / "b2.parquet"))
+    v0, h0 = lpk.version(), hist.version()
+    j0 = _jobs(spark)
+    apply(batch, 2)
+    jobs = _jobs(spark) - j0
+    assert lpk.version() == v0 + 1
+    assert [c["mode"] for c in lpk.history()[:1]] == ["merge"]
+    assert not lpk._state_at()["patches"]
+    assert hist.version() == h0 + 1
+    assert jobs <= STREAM_BATCH_BUDGET, jobs
+    want = sorted((i, v, rv) for i, (v, rv) in table.rows.items())
+    assert _current(spark, dest) == want
+
+    j0 = _jobs(spark)
+    apply(batch, 2)  # redelivered after a crash before the offset commit
+    jobs = _jobs(spark) - j0
+    assert (lpk.version(), hist.version()) == (v0 + 1, h0 + 1)
+    assert jobs <= STREAM_REDELIVERY_BUDGET, jobs
+    assert _current(spark, dest) == want

@@ -124,17 +124,24 @@ def test_fsspec_exclusive_concurrent_single_winner():
 
 def test_empty_merge_on_bucketized_table_is_noop(spark, tmp_path):
     """Zero-change CDC cycle: merging an EMPTY source into a bucketized
-    table must commit a no-op, not crash — an empty partitionBy write
-    leaves zero part files, so the per-bucket count read-back cannot
-    infer a schema (regression: UNABLE_TO_INFER_SCHEMA)."""
+    table touches no bucket, so it publishes no version. With extra
+    commit fields to record (a view's exactly-once marker) it still
+    commits, and must not crash — an empty partitionBy write leaves zero
+    part files, so the per-bucket count read-back cannot infer a schema
+    (regression: UNABLE_TO_INFER_SCHEMA)."""
     t = VersionedParquetTable(tmp_path / "t")
     t.write(_df(spark, [(i, f"v{i}") for i in range(20)]), mode="overwrite")
     t.merge_upsert(spark, _df(spark, [(0, "V0")]), ["id"], num_buckets=4)
     v_before = t.version()
     rows_before = sorted(tuple(r) for r in t.read(spark).collect())
     empty = spark.createDataFrame([], "id long, v string")
-    t.merge_upsert(spark, empty, ["id"])
-    assert t.version() == v_before + 1
+    assert t.merge_upsert(spark, empty, ["id"]) == v_before
+    assert t.version() == v_before
+    assert t.count_rows(spark) == 20
+    marked = t.merge_upsert(
+        spark, empty, ["id"], extra_commit_fields={"set_props": {"m": "1"}}
+    )
+    assert marked == t.version() == v_before + 1 and t.get_property("m") == "1"
     assert sorted(tuple(r) for r in t.read(spark).collect()) == rows_before
     # and a normal merge still works afterwards
     t.merge_upsert(spark, _df(spark, [(1, "V1")]), ["id"])
@@ -1107,18 +1114,18 @@ def test_merge_upsert_with_delete_keys_one_commit(spark, tmp_path):
 
 
 def test_store_merge_signatures_stay_polymorphic():
-    """The plans layer calls merge_upsert with strategy/batch_rows_hint/
-    delete_keys on WHICHEVER store backs latest_pk_version — both
-    implementations must accept the full kwarg surface (a Delta store
-    maps strategy to its own deletion-vector property and ignores the
-    hint), or a Delta-backed deployment TypeErrors at runtime."""
+    """The plans layer calls merge_upsert with strategy/delete_keys on
+    WHICHEVER store backs latest_pk_version — both implementations must
+    accept the full kwarg surface (a Delta store maps strategy to its
+    own deletion-vector property), or a Delta-backed deployment
+    TypeErrors at runtime."""
     import importlib
     import inspect
 
     from odbc2deltalake_spark.tablestore import VersionedParquetTable
 
     mod = importlib.import_module("odbc2deltalake_spark.delta_store")
-    need = {"strategy", "batch_rows_hint", "delete_keys",
+    need = {"strategy", "delete_keys",
             "extra_commit_fields", "target_bucket_rows"}
     for cls in (VersionedParquetTable, mod.DeltaTableStore):
         params = set(inspect.signature(cls.merge_upsert).parameters)
@@ -1352,48 +1359,129 @@ def test_delta_check_constraint_grammar_property():
     run()
 
 
-def test_max_and_count_from_commit_metadata(spark, tmp_path):
-    """Counted writes record the row count and exact bounds on their
-    commit; max_and_count answers from them with zero jobs and equals the
-    scan answer after every operation. Operations that leave a dir's
-    recorded numbers stale (masks, patches) or rewrite dirs without
-    recording (compact, merges, plain writes) fall back to the scan."""
-    from odbc2deltalake_spark.tablestore import TableStore
+def _probe_route(spark, t, col, monkeypatch):
+    """``t.max_and_count(spark, col)``, checked equal to the scan, and
+    the route that answered it: "metadata" (commit log), "footer"
+    (parquet footers) or "scan"."""
+    import odbc2deltalake_spark.tablestore as ts
 
     sched = spark.sparkContext._jsc.sc().dagScheduler()
+    answered = []
+    real = ts.footer_max_and_count
+
+    def spy(files, c):
+        got = real(files, c)
+        answered.append(got is not None)
+        return got
+
+    monkeypatch.setattr(ts, "footer_max_and_count", spy)
+    j0 = sched.nextJobId()
+    got = t.max_and_count(spark, col)
+    jobs = sched.nextJobId() - j0
+    monkeypatch.setattr(ts, "footer_max_and_count", real)
+    assert got == ts.TableStore.max_and_count(t, spark, col), col
+    if jobs:
+        return "scan"
+    return "footer" if any(answered) else "metadata"
+
+
+def test_max_and_count_from_commit_metadata(spark, tmp_path, monkeypatch):
+    """Counted writes record the row count and exact bounds on their
+    commit; max_and_count answers from them with zero jobs and equals the
+    scan answer after every operation. Dirs rewritten without recording
+    (compact, merges, plain writes) answer from their parquet footers;
+    operations that leave a dir's numbers stale (masks, patches) fall
+    back to the scan."""
     t = VersionedParquetTable(tmp_path / "t")
 
-    def check(from_metadata):
-        j0 = sched.nextJobId()
-        got = t.max_and_count(spark, "id")
-        jobs = sched.nextJobId() - j0
-        assert got == TableStore.max_and_count(t, spark, "id")
-        assert (jobs == 0) == from_metadata, jobs
+    def check(route):
+        assert _probe_route(spark, t, "id", monkeypatch) == route
 
     t.write_counted_minmax(_df(spark, [(i, "a") for i in range(10)]), ["id"], mode="overwrite")
-    check(True)
+    check("metadata")
     assert t.max_and_count(spark, None) == (None, 10)
     v1, n, _ = t.write_counted_minmax(_df(spark, [(42, "b")]), ["id"], mode="append")
     assert n == 1
-    check(True)
+    check("metadata")
     v = t.version()
     assert t.write_counted_minmax(_df(spark, []), ["id"], mode="append") == (v, 0, {"id": (None, None)})
     assert t.version() == v  # a zero-row counted append commits nothing
     t.checkpoint()
-    check(True)
+    check("metadata")
     t.write(_df(spark, [(7, "c")]), mode="append")  # uncounted dir
-    check(False)
+    check("footer")
     t.restore(v1)  # the restored dirs carry their recorded numbers
-    check(True)
+    check("metadata")
     t.delete_where(spark, ("id", "=", 42), lazy=True)  # mask
-    check(False)
+    check("scan")
     t.fold_masks(spark)
-    check(False)
+    check("footer")
     t.write_counted_minmax(_df(spark, [(i, "d") for i in range(5)]), ["id"], mode="overwrite")
     t.write_counted_minmax(_df(spark, [(9, "e")]), ["id"], mode="append")
     t.compact(spark, out_partitions=1)
-    check(False)
+    check("footer")
     t.merge_upsert(spark, _df(spark, [(3, "f"), (99, "g")]), ["id"], num_buckets=4)
     t.merge_upsert(spark, _df(spark, [(98, "h")]), ["id"], strategy="patch")
     assert t._state_at()["patches"]
-    check(False)
+    check("scan")
+
+
+def test_max_and_count_from_footers(spark, tmp_path, monkeypatch):
+    """Bucketized merges, folds, compactions and restores record no
+    counts, so the probe reads the live dirs' parquet footers: zero jobs
+    and the scan's answer. Each case the footers cannot answer exactly
+    falls back to the scan."""
+    from odbc2deltalake_spark.tablestore import FsspecStorageBackend
+    from tests.test_fsspec_backend import LocalLikeFS
+
+    def route(t, col="id"):
+        return _probe_route(spark, t, col, monkeypatch)
+
+    t = VersionedParquetTable(tmp_path / "t")
+    t.write(_df(spark, [(i, "a") for i in range(100)]), mode="overwrite")
+    t.merge_upsert(spark, _df(spark, [(5, "b"), (500, "c")]), ["id"], num_buckets=4)
+    v_merged = t.version()
+    t.merge_upsert(spark, _df(spark, [(7, "d"), (700, "e")]), ["id"])  # partial
+    assert route(t) == "footer" and route(t, None) == "footer"
+    t.merge_upsert(spark, _df(spark, [(800, "f")]), ["id"], strategy="patch")
+    assert route(t) == "scan"  # a patch chain changes rows in place
+    t.fold_patches(spark)
+    assert route(t) == "footer"
+    t.delete_where(spark, ("id", "=", 7), lazy=True)
+    assert route(t) == "scan"  # a mask hides rows the footers count
+    t.restore(v_merged)
+    assert route(t) == "footer"
+    assert t.max_and_count(spark, "id") == (500, 101)
+    assert route(t, "v") == "scan"  # non-integral column
+
+    c = VersionedParquetTable(tmp_path / "c")
+    for lo in (0, 10, 20):
+        c.write(_df(spark, [(i, "a") for i in range(lo, lo + 10)]), mode="append")
+    c.compact(spark, out_partitions=2)
+    assert route(c) == "footer"
+
+    # a live dir whose written schema lacks the column reads NULL there
+    w = VersionedParquetTable(tmp_path / "w")
+    w.write(_df(spark, [(1, "a"), (2, "b")]), mode="overwrite")
+    w.write(
+        spark.createDataFrame([(3, "c", 30)], "id long, v string, n long"),
+        mode="append",
+        merge_schema=True,
+    )
+    assert route(w, "n") == "scan" and route(w, "id") == "footer"
+
+    # an all-NULL row group carries no min/max statistics
+    z = VersionedParquetTable(tmp_path / "z")
+    z.write(
+        spark.createDataFrame([(1, "a", None)], "id long, v string, n long"),
+        mode="overwrite",
+    )
+    assert route(z, "n") == "scan" and route(z, "id") == "footer"
+
+    # footers of a non-local data plane are not read
+    f = VersionedParquetTable(
+        tmp_path / "f", backend=FsspecStorageBackend(LocalLikeFS())
+    )
+    f.write(_df(spark, [(1, "a")]), mode="overwrite")
+    f.merge_upsert(spark, _df(spark, [(2, "b")]), ["id"], num_buckets=4)
+    assert route(f) == "scan"
