@@ -10,9 +10,13 @@ fewer partitions than the session's parallelism (guide §2: "make
 partitioning scale-adaptive ... rather than a constant tuned for either
 local mode or the cluster").
 
-The decision reads the physical partition count of the frame (no job),
-and when it fires the exchange moves a provably small input — it fires
-*because* the input underfills the cluster. Round-robin repartition is
+The decision reads the physical partition count of the frame and the
+optimizer's size estimate of its plan (neither runs a job), and it fires
+only for an input that underfills the cluster AND is estimated below
+``SPREAD_MAX_BYTES`` — so the exchange moves a provably small input. A
+huge scan that arrives in one partition (one giant row group) is left
+alone: shuffling it costs more than the map stage it would spread.
+Round-robin repartition is
 retry-safe (Spark sorts before repartitioning by default, SPARK-23207)
 and value-preserving; every caller below it is row-order-insensitive
 (hash aggregations over ints/strings, per-row pure kernels, per-doc
@@ -25,16 +29,37 @@ mapInPandas codec rows run 32 Arrow tasks instead of one.
 
 from __future__ import annotations
 
+from typing import Optional
+
 from pyspark.sql import DataFrame
 
 from odbc2deltalake_spark.session import shuffle_parallelism
 
+#: the largest input, by the optimized plan's ``sizeInBytes`` estimate,
+#: that the spread moves through an exchange (a plan without statistics
+#: estimates ``spark.sql.defaultSizeInBytes``, which is far above it)
+SPREAD_MAX_BYTES = 256 << 20
+
+
+def plan_size_in_bytes(df: DataFrame) -> Optional[int]:
+    """The optimizer's size estimate of ``df``'s plan; None when the
+    plan cannot report one. Reads statistics only — no job runs."""
+    from py4j.protocol import Py4JError
+
+    try:
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        return int(str(stats.sizeInBytes()))
+    except (Py4JError, ValueError):
+        return None
+
 
 def spread_small_scan(df: DataFrame, target: int | None = None) -> DataFrame:
     """Round-robin repartition ``df`` to the session's parallelism —
-    ONLY when it currently has fewer partitions. No-op (returns ``df``
-    unchanged, no exchange in the plan) whenever the scan already
-    fills the cluster, i.e. always at scale."""
+    ONLY when it currently has fewer partitions and its plan is
+    estimated at most ``SPREAD_MAX_BYTES``. No-op (returns ``df``
+    unchanged, no exchange in the plan) whenever the scan already fills
+    the cluster, i.e. always at scale, and for any input too big to
+    move cheaply."""
     if target is None:
         target = shuffle_parallelism(df.sparkSession)
     try:
@@ -42,5 +67,8 @@ def spread_small_scan(df: DataFrame, target: int | None = None) -> DataFrame:
     except Exception:
         return df
     if current >= target:
+        return df
+    size = plan_size_in_bytes(df)
+    if size is None or size > SPREAD_MAX_BYTES:
         return df
     return df.repartition(target)

@@ -2,7 +2,8 @@
 
 These are the genuinely hard pieces of the reference (SURVEY.md §7.3 #1/#2)
 — the three-source latest-pk union with anti-join precedence, delete
-detection, and the history-derived current-rows reconstruction — kept pure
+detection, the one-shuffle key diff from which the delta load derives
+both, and the history-derived current-rows reconstruction — kept pure
 (DataFrame in → DataFrame out) so the consistency invariant can test them
 directly.
 
@@ -96,6 +97,89 @@ def deletes_keys(
         old_latest_pk.select(*pk_cols)
         .join(current_expected.select(*pk_cols), on=pk_cols, how="left_anti")
         .distinct()
+    )
+
+
+# K1's output columns beside the keys: presence flag and delta value of
+# each input. A separate flag tells "absent" from "present with a NULL
+# delta value"; the "__" prefix keeps them apart from source columns.
+KD_IN_NEW, KD_NEW = "__in_new", "__new_ts"
+KD_IN_OLD, KD_OLD = "__in_old", "__old_ts"
+KD_IN_D1, KD_D1 = "__in_d1", "__d1_ts"
+
+
+def key_diff(
+    pk_ts: DataFrame,
+    old_latest_pk: DataFrame,
+    delta_1: DataFrame,
+    pk_cols: list[str],
+    ts_col: str,
+) -> DataFrame:
+    """K1: the delta load's three key sets side by side, in ONE shuffle.
+
+    One row per key found in the source snapshot ``pk_ts``, the old
+    index ``old_latest_pk`` or the change set ``delta_1``, carrying each
+    input's presence flag and delta value. The three inputs are tagged,
+    unioned and grouped on the keys, so a single hash exchange replaces
+    the separate EXCEPT / anti-join cascades of the strange-update probe,
+    U2 and U1 (reference:odbc2deltalake/db_to_delta.py:749-859,995-1184).
+    Each of those is then a narrow filter over this frame:
+    :func:`key_diff_strange`, :func:`key_diff_deleted` and
+    :func:`key_diff_latest_pk`. Keys are unique within each input (they
+    are primary keys), so each group holds at most one row per input."""
+    sel = pk_cols + [ts_col]
+    tag = "__kd_src"
+    parts = [
+        df.select(*sel, F.lit(i).alias(tag))
+        for i, df in enumerate((pk_ts, old_latest_pk, delta_1))
+    ]
+    aggs = []
+    for i, (flag, value) in enumerate(
+        ((KD_IN_NEW, KD_NEW), (KD_IN_OLD, KD_OLD), (KD_IN_D1, KD_D1))
+    ):
+        hit = F.col(tag) == i
+        aggs.append(F.bool_or(hit).alias(flag))
+        aggs.append(F.max(F.when(hit, F.col(ts_col))).alias(value))
+    return (
+        parts[0].unionByName(parts[1]).unionByName(parts[2])
+        .groupBy(*pk_cols)
+        .agg(*aggs)
+    )
+
+
+def key_diff_moved():
+    """Keys whose snapshot ``(pk, ts)`` is not in the old index: the rows
+    of ``pk_ts EXCEPT ALL old_latest_pk``. NULL-safe on ts, as EXCEPT is."""
+    same = F.col(KD_IN_OLD) & F.col(KD_NEW).eqNullSafe(F.col(KD_OLD))
+    return F.col(KD_IN_NEW) & ~same
+
+
+def key_diff_strange():
+    """Strange-update keys: moved, yet absent from ``delta_1`` (their
+    delta value did not pass the watermark)."""
+    return key_diff_moved() & ~F.col(KD_IN_D1)
+
+
+def key_diff_deleted():
+    """U2 over K1: keys of the old index that neither the snapshot nor
+    ``delta_1`` holds. (``delta_2`` needs no term: its keys come from the
+    snapshot.)"""
+    return F.col(KD_IN_OLD) & ~F.col(KD_IN_NEW) & ~F.col(KD_IN_D1)
+
+
+def key_diff_latest_pk(
+    diff: DataFrame, pk_cols: list[str], ts_col: str, delta_load_value=None
+) -> DataFrame:
+    """U1 over K1 without the ``delta_2`` branch: ``delta_1``'s version of
+    every key it holds, else the snapshot's, capped at
+    ``delta_load_value`` as in :func:`latest_pk_union` (a NULL snapshot
+    value fails the cap there too)."""
+    snap = F.col(KD_IN_NEW)
+    if delta_load_value is not None:
+        snap = snap & (F.col(KD_NEW) <= F.lit(delta_load_value))
+    return diff.filter(F.col(KD_IN_D1) | snap).select(
+        *pk_cols,
+        F.when(F.col(KD_IN_D1), F.col(KD_D1)).otherwise(F.col(KD_NEW)).alias(ts_col),
     )
 
 

@@ -11,9 +11,11 @@ reference:odbc2deltalake/db_to_delta.py:178-286 (dispatch), 483-691
 Scale design (100 TB):
 - The history table is append-only; per-load writes touch only change
   sets. Nothing ever rewrites history.
-- ``latest_pk_version`` / ``primary_keys_ts`` are keys-only — the widest
-  shuffle in a load is the PK-key anti-join cascade over those narrow
-  tables, broadcast when small, AQE-planned otherwise.
+- ``latest_pk_version`` / ``primary_keys_ts`` are keys-only. A delta load
+  shuffles them once: the key diff (``operators.scd2.key_diff``) groups
+  the snapshot, the old index and the change-set keys on the PKs, and
+  the strange keys, the deleted keys and the new index are narrow
+  filters over that one checkpointed aggregate.
 - Watermark probes are scalar aggregates pushed to the source.
 - The strange-update key fetch is a broadcast semi join against the
   source (no 7000-char SQL cap, reference:db_to_delta.py:960-992); above
@@ -29,7 +31,7 @@ import traceback
 from pathlib import Path
 from typing import Any, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from odbc2deltalake_spark.config import WriteConfig, WriteConfigAndInfos
@@ -40,8 +42,15 @@ from odbc2deltalake_spark.functions.projection import (
 )
 from odbc2deltalake_spark.metadata import SYS, ColInfo, resolve_type
 from odbc2deltalake_spark.operators.scd2 import (
-    deletes_keys,
+    KD_IN_NEW,
+    KD_IN_OLD,
+    KD_NEW,
     derive_latest_pk_from_history,
+    key_diff,
+    key_diff_deleted,
+    key_diff_latest_pk,
+    key_diff_moved,
+    key_diff_strange,
     latest_pk_union,
 )
 from odbc2deltalake_spark.plans.destination import DeltaDestination, DeltaLogger
@@ -458,7 +467,7 @@ def do_delta_load(ctx: _Ctx, simple: bool = False, simple_check: bool = False) -
     if simple:
         n1, mm = _step2_write()
         # r14 (guide §2.6): the HISTORY append and _finish_simple's
-        # housekeeping prefix (empty delta_2 overwrite + pk_ts drop —
+        # housekeeping prefix (delta_2 reset + pk_ts drop —
         # other tables entirely) are data-independent; overlap them.
         # The latest_pk merge — the load's effective watermark commit —
         # stays strictly AFTER the append: advancing the watermark
@@ -490,54 +499,43 @@ def do_delta_load(ctx: _Ctx, simple: bool = False, simple_check: bool = False) -
         f1.result()
         n1, mm = f2.result()
 
-    # step 3 — strange updates (reference:db_to_delta.py:995-1184).
-    # r14: the step-2 HISTORY append and the step-3 PROBE are also
-    # data-independent — the probe reads primary_keys_ts, delta_1 (both
-    # committed above) and latest_pk@old, never the history — so they
-    # overlap too (guide §2.6). Only the RARE strange-update branches
-    # append history themselves; _probe_additional_updates therefore
-    # returns the decision without acting on it, and the branch work
-    # (which must serialize after step 2's append for the +1µs ordering
-    # contract) runs after both futures complete. Crash interleavings:
-    # history-appended-but-no-delta_2 equals a sequential crash inside
-    # step 3; probe-done-but-history-missing equals a sequential crash
-    # between steps 2 and 3 — both states the restore path already
-    # tolerates.
+    # step 3 — one key diff (K1) over primary_keys_ts, latest_pk@old and
+    # the delta_1 keys: a single checkpointed shuffle from which the
+    # strange keys (reference:db_to_delta.py:995-1184), the deleted keys
+    # (:749-859) and the new index are all narrow filters. The step-2
+    # HISTORY append and the diff are data-independent — the diff reads
+    # primary_keys_ts, delta_1 (both committed above) and latest_pk@old,
+    # never the history — so they overlap (guide §2.6). Only the RARE
+    # strange-update branches append history themselves;
+    # _key_diff therefore returns the decision without acting on it,
+    # and the branch work (which must serialize after step 2's append
+    # for the +1µs ordering contract) runs after both futures complete.
+    # The diff itself lives only in executor memory. Crash
+    # interleavings: history-appended-but-no-diff equals a sequential
+    # crash between steps 2 and 3; diff-done-but-history-missing commits
+    # nothing but (at most) the delta_2 reset — a sequential crash inside
+    # step 3; both states the restore path already tolerates.
     assert old_pk_version is not None
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_hist = pool.submit(_step2_append, n1, mm)
-        f_probe = pool.submit(_probe_additional_updates, ctx, old_pk_version)
-        probe = f_probe.result()
+        f_diff = pool.submit(_key_diff, ctx, old_pk_version)
+        diff = f_diff.result()
         f_hist.result()
-    new_wm = _act_additional_updates(ctx, probe)
-    delta_load_value = new_wm if new_wm is not None else delta_load_value
+    diff = _act_additional_updates(ctx, diff)
 
-    # steps 3.5 (deletes) and 4 (current-rows index) are also
-    # data-independent: the new index excludes deleted keys because the
-    # pk_ts snapshot no longer contains them — _do_deletes only appends
-    # tombstones to the HISTORY table, which step 4 never reads. Overlap
-    # them the same way (guide §2.6); both must complete before the
-    # reconcile.
+    # steps 3.5 (deletes) and 4 (current-rows index) are data-independent:
+    # both read only the checkpointed diff and the change sets step 3
+    # left final; _do_deletes appends tombstones to the HISTORY table,
+    # which step 4 never reads, and the diff no longer reads the
+    # latest_pk_version that step 4 overwrites. Overlap them the same way
+    # (guide §2.6); both must complete before the reconcile. Either one
+    # failing fails the load, and the failure path restores
+    # latest_pk_version, so the next load diffs against the same old
+    # index and derives the same deleted keys again.
     logger.info("Delta step 3.5: write deletes")
-
-    def _step4() -> int:
-        logger.info("Delta step 4: write latest_pk_version")
-        latest = latest_pk_union(
-            dest.delta_2.read(ctx.spark) if dest.delta_2.exists() else None,
-            dest.delta_1.read(ctx.spark),
-            dest.primary_keys_ts.read(ctx.spark),
-            ctx.pk_names,
-            ctx.delta_name,
-            delta_load_value=delta_load_value,
-        )
-        _, n, _ = dest.latest_pk_version.write_counted_minmax(
-            latest, [ctx.delta_name], mode="overwrite"
-        )
-        return n
-
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_del = pool.submit(_do_deletes, ctx, old_pk_version)
-        f4 = pool.submit(_step4)
+        f_del = pool.submit(_do_deletes, ctx, diff)
+        f4 = pool.submit(_write_latest_pk, ctx, diff, delta_load_value)
         f_del.result()
         target_count = f4.result()
 
@@ -564,9 +562,7 @@ def _finish_simple_prefix(ctx: _Ctx) -> None:
     delta_2 to empty and drop the pk snapshot — tables the history
     append never touches, so the caller may overlap the two."""
     dest = ctx.dest
-    # write_empty either way (r15): identical semantics (0-row overwrite,
-    # schema pinned) and the empty frame is 1-slice, not 32 tasks
-    dest.delta_2.write_empty(ctx.spark, dest.delta_1.schema())
+    _reset_delta_2(ctx)
     if dest.primary_keys_ts.exists():
         dest.primary_keys_ts.delete_table()
 
@@ -616,75 +612,105 @@ def _finish_simple(
     return res
 
 
-# -------------------------------------------------------- strange updates --
+def _reset_delta_2(ctx: _Ctx) -> None:
+    """Leave delta_2 empty with delta_1's schema. A delta_2 that already
+    is (the usual case: the last load fetched no strange rows) keeps its
+    version — its row count comes from commit metadata or parquet
+    footers, no job — so a load commits no no-op overwrite. ``write_empty``
+    otherwise: a 0-row overwrite of one slice, not a 32-task job."""
+    d2 = ctx.dest.delta_2
+    schema = ctx.dest.delta_1.schema()
+    if (
+        d2.exists()
+        and d2.schema() == schema
+        and d2.max_and_count(ctx.spark, None)[1] == 0
+    ):
+        return
+    d2.write_empty(ctx.spark, schema)
 
 
-def _probe_additional_updates(ctx: _Ctx, old_pk_version: int):
-    """Decision half of step 3 (r14 split): compute the strange-update
-    count and the checkpointed frames the branches need, and handle the
-    common 0-strange case inline (the empty delta_2 overwrite touches
-    neither the history nor delta_1, so it is safe while step 2's
-    history append is still in flight). Returns None when fully handled,
-    else ``(additional, real_additional, update_count)`` for
-    ``_act_additional_updates`` to act on after the append completes."""
+# ------------------------------------------------------------- key diff --
+
+
+@dataclasses.dataclass
+class _KeyDiff:
+    """Step 3's one pass over the load's key sets (:func:`key_diff`),
+    checkpointed, with the counts the later steps branch on. The counts
+    ride an Observation on the checkpoint pass itself."""
+
+    keys: DataFrame  # the checkpointed K1 frame
+    strange: int  # strange-update keys (key_diff_strange)
+    deleted: int  # deleted keys (key_diff_deleted)
+    rewind_from: Any  # MIN snapshot ts over the moved keys
+    fetched: bool = False  # delta_2 holds this load's key-set fetch
+    rewound: bool = False  # the load re-extracted from rewind_from
+
+
+def _key_diff(ctx: _Ctx, old_pk_version: int) -> _KeyDiff:
+    """Decision half of step 3: one shuffle over primary_keys_ts,
+    latest_pk@old and the delta_1 keys, checkpointed, counting the
+    strange and deleted keys on the way. The common 0-strange case is
+    handled inline (the delta_2 reset touches neither the history nor
+    delta_1, so it is safe while step 2's history append is still in
+    flight); ``_act_additional_updates`` acts on the rest after the
+    append completes."""
     dest = ctx.dest
     assert ctx.delta_name is not None
     sel = ctx.pk_names + [ctx.delta_name]
-    pk_ts = dest.primary_keys_ts.read(ctx.spark).select(*sel)
-    old_lpk = dest.latest_pk_version.read(ctx.spark, version=old_pk_version).select(*sel)
-    additional = pk_ts.exceptAll(old_lpk)
-    d1_keys = dest.delta_1.read(ctx.spark).select(*ctx.pk_names)
-    real_additional = (
-        additional.select(*ctx.pk_names).join(d1_keys, on=ctx.pk_names, how="left_anti").distinct()
+    obs = Observation()
+    keys = key_diff(
+        dest.primary_keys_ts.read(ctx.spark).select(*sel),
+        dest.latest_pk_version.read(ctx.spark, version=old_pk_version).select(*sel),
+        dest.delta_1.read(ctx.spark).select(*sel),
+        ctx.pk_names,
+        ctx.delta_name,
+    ).observe(
+        obs,
+        F.count(F.when(key_diff_strange(), 1)).alias("strange"),
+        F.count(F.when(key_diff_deleted(), 1)).alias("deleted"),
+        F.min(F.when(key_diff_moved(), F.col(KD_NEW))).alias("rewind_from"),
     )
-    # cache: counted then re-used for the fetch / min()
-    additional = additional.localCheckpoint(eager=False)
-    real_additional = real_additional.localCheckpoint(eager=False)
-    update_count = real_additional.count()
+    # eager: the shuffle and the Observation run once, here; the
+    # strange-key fetch, the deletes and the index write read the
+    # checkpoint
+    keys = keys.localCheckpoint(eager=True)
+    got = obs.get
+    diff = _KeyDiff(keys, got["strange"], got["deleted"], got["rewind_from"])
+    if diff.strange == 0:
+        _reset_delta_2(ctx)
+    return diff
 
-    if update_count == 0:
-        dest.delta_2.write_empty(ctx.spark, dest.delta_1.schema())
-        return None
-    return additional, real_additional, update_count
 
-
-def _act_additional_updates(ctx: _Ctx, probe) -> Optional[Any]:
+def _act_additional_updates(ctx: _Ctx, diff: _KeyDiff) -> _KeyDiff:
     """Branch half of step 3 — runs strictly after step 2's history
     append (its own appends carry the +1µs later stamp and assume step
-    2's rows already landed)."""
-    if probe is None:
-        return None
-    additional, real_additional, update_count = probe
-    return _handle_additional_updates(ctx, additional, real_additional, update_count)
+    2's rows already landed). Timestamp-inconsistent updates — e.g. a
+    restore-from-backup rewound rows below the watermark
+    (reference:odbc2deltalake/db_to_delta.py:995-1184).
 
+    moved   = (pk, ts) in primary_keys_ts EXCEPT (pk, ts) in latest_pk@old
+    strange = moved.pks EXCEPT delta_1.pks
 
-def _handle_additional_updates(
-    ctx: _Ctx, additional, real_additional, update_count: int
-) -> Optional[Any]:
-    """Timestamp-inconsistent updates — e.g. a restore-from-backup rewound
-    rows below the watermark (reference:odbc2deltalake/db_to_delta.py:995-1184).
-
-    additional = (pk, ts) in primary_keys_ts EXCEPT (pk, ts) in latest_pk@old
-    real_additional = additional.pks EXCEPT delta_1.pks
-
-    - 0 keys → empty delta_2 (handled in _probe_additional_updates)
+    - 0 keys → nothing to do (_key_diff left delta_2 empty)
     - > max_complex_entries (or no_complex_entries_load) → rewind: new
-      watermark = MIN(ts of additional); re-extract WHERE ts > that value
-      into the history; return the rewound watermark (it caps step 4)
+      watermark = MIN(ts of moved); re-extract WHERE ts >= that value
+      into the history; the rewound watermark caps step 4
     - else → fetch exactly those rows via broadcast semi join → delta_2
     """
+    if diff.strange == 0:
+        return diff
     dest = ctx.dest
     assert ctx.delta_name is not None
-    d1_schema = dest.delta_1.schema()
-    if update_count > ctx.cfg.max_complex_entries or ctx.cfg.no_complex_entries_load:
-        dest.delta_2.write_empty(ctx.spark, d1_schema)
+    if diff.strange > ctx.cfg.max_complex_entries or ctx.cfg.no_complex_entries_load:
+        _reset_delta_2(ctx)
         ctx.logger.warning(
-            f"Delta step 3: load {update_count} strange updates via normal delta load"
+            f"Delta step 3: load {diff.strange} strange updates via normal delta load"
         )
-        rewind_wm = additional.agg(F.min(ctx.delta_name).alias("m")).first()["m"]
         # >= (not the reference's strict >): the min-ts strange row itself
         # must reach the history or step 4 indexes a phantom key
-        changed = ctx.source.read_where_ge(ctx.spark, _source_delta_name(ctx), rewind_wm)
+        changed = ctx.source.read_where_ge(
+            ctx.spark, _source_delta_name(ctx), diff.rewind_from
+        )
         # +1µs on the re-extraction's __timestamp: step 2 already appended
         # some of these keys under ctx.load_ts; if the source row mutated
         # between the two extractions, two different versions with an
@@ -709,12 +735,12 @@ def _handle_additional_updates(
                 dest.delta_1.read(ctx.spark),
                 delta_interval=mm.get(ctx.delta_name),
             )
-        return rewind_wm
+        return dataclasses.replace(diff, rewound=True)
 
     ctx.logger.warning(
-        f"Delta step 3: load {update_count} strange updates via key-set join"
+        f"Delta step 3: load {diff.strange} strange updates via key-set join"
     )
-    src_keys = real_additional.select(
+    src_keys = diff.keys.filter(key_diff_strange()).select(
         *[F.col(n).alias(_source_name(ctx, n)) for n in ctx.pk_names]
     )
     fetched = ctx.source.read_for_keys(
@@ -730,30 +756,45 @@ def _handle_additional_updates(
         ctx.append_history(
             dest.delta_2.read(ctx.spark), delta_interval=mm.get(ctx.delta_name)
         )
-    return None
+    return dataclasses.replace(diff, fetched=n > 0)
 
 
 # ----------------------------------------------------------------- deletes --
 
+#: tombstones per history file a delete-bearing load writes
+TOMBSTONE_ROWS_PER_FILE = 2_000_000
 
-def _do_deletes(ctx: _Ctx, old_pk_version: int) -> None:
-    """Deletes = latest_pk@old ∖ currently-expected keys → tombstones
-    (reference:odbc2deltalake/db_to_delta.py:749-859)."""
+
+def _do_deletes(ctx: _Ctx, diff: _KeyDiff) -> None:
+    """Step 3.5 — deletes = latest_pk@old ∖ currently-expected keys →
+    tombstones (reference:odbc2deltalake/db_to_delta.py:749-859), a
+    filter over the key diff. A rewound load re-extracted delta_1, so its
+    expected keys are the snapshot's plus the re-extraction's."""
     dest = ctx.dest
     assert ctx.delta_name is not None
-    current = latest_pk_union(
-        dest.delta_2.read(ctx.spark) if dest.delta_2.exists() else None,
-        dest.delta_1.read(ctx.spark),
-        dest.primary_keys_ts.read(ctx.spark),
-        ctx.pk_names,
-        ctx.delta_name,
-    )
-    old_lpk = dest.latest_pk_version.read(ctx.spark, version=old_pk_version)
-    dels = deletes_keys(old_lpk, current, ctx.pk_names)
-    # a store that would commit a zero-row append as an empty version
-    # keeps the emptiness probe; the others drop the empty append itself
-    if dest.delta.commits_empty_appends and dels.isEmpty():
-        return
+    if not diff.rewound:
+        # counted with the diff: a zero-delete load runs no job here and
+        # appends nothing, on every store
+        if not diff.deleted:
+            return
+        dels = diff.keys.filter(key_diff_deleted()).select(*ctx.pk_names)
+    else:
+        dels = (
+            diff.keys.filter(F.col(KD_IN_OLD) & ~F.col(KD_IN_NEW))
+            .select(*ctx.pk_names)
+            .join(
+                dest.delta_1.read(ctx.spark).select(*ctx.pk_names),
+                on=ctx.pk_names,
+                how="left_anti",
+            )
+        )
+        # a store that would commit a zero-row append as an empty version
+        # keeps the emptiness probe; the others drop the empty append itself
+        if dest.delta.commits_empty_appends and dels.isEmpty():
+            return
+    # the diff's partitioning would spread a handful of tombstones over
+    # one small file per partition; size the files by the deleted count
+    dels = dels.coalesce(max(1, -(-diff.deleted // TOMBSTONE_ROWS_PER_FILE)))
     schema = {f.name: f.dataType for f in dest.delta_1.schema().fields}
     tombs = tombstone_projection(
         dels,
@@ -762,10 +803,56 @@ def _do_deletes(ctx: _Ctx, old_pk_version: int) -> None:
         schema,
         ctx.load_ts,
     )
-    # one pass: the append counts its rows, and with none (the usual
-    # load) it commits nothing — no separate emptiness job re-running
-    # the anti-join cascade
     ctx.append_history(tombs)
+
+
+# ------------------------------------------------------- key index write --
+
+
+def _write_latest_pk(ctx: _Ctx, diff: _KeyDiff, delta_load_value: Any) -> int:
+    """Step 4 — overwrite latest_pk_version with the load's current keys
+    (U1, reference:odbc2deltalake/db_to_delta.py:289-427); returns its
+    row count, observed during the write.
+
+    From the key diff: delta_1's version of the keys it holds, else the
+    snapshot's capped at ``delta_load_value``, with the key-set fetch in
+    delta_2 overriding both. The index keeps the snapshot's layout: as
+    many files as the primary_keys_ts scan has partitions, each in key
+    order. A rewound load instead unions the re-extracted delta_1 with the
+    snapshot capped at the rewound watermark."""
+    ctx.logger.info("Delta step 4: write latest_pk_version")
+    dest = ctx.dest
+    assert ctx.delta_name is not None
+    sel = ctx.pk_names + [ctx.delta_name]
+    d1 = dest.delta_1.read(ctx.spark).select(*sel)
+    pk_ts = dest.primary_keys_ts.read(ctx.spark).select(*sel)
+    if diff.rewound:
+        latest = latest_pk_union(
+            None, d1, pk_ts, ctx.pk_names, ctx.delta_name,
+            delta_load_value=diff.rewind_from,
+        )
+    else:
+        latest = key_diff_latest_pk(
+            diff.keys, ctx.pk_names, ctx.delta_name, delta_load_value
+        )
+        types = d1.unionByName(pk_ts)
+        if diff.fetched:
+            d2 = dest.delta_2.read(ctx.spark).select(*sel)
+            latest = latest.join(
+                d2.select(*ctx.pk_names), on=ctx.pk_names, how="left_anti"
+            ).unionByName(d2)
+            types = d2.unionByName(types)
+        # the key diff groups on the types widened over the OLD index
+        # too; the index keeps the change sets' and snapshot's types
+        latest = (
+            latest.select(*[F.col(f.name).cast(f.dataType) for f in types.schema])
+            .coalesce(max(1, pk_ts.rdd.getNumPartitions()))
+            .sortWithinPartitions(*ctx.pk_names)
+        )
+    _, n, _ = dest.latest_pk_version.write_counted_minmax(
+        latest, [ctx.delta_name], mode="overwrite"
+    )
+    return n
 
 
 # ------------------------------------------------------------- watermarks --

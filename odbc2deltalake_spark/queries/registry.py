@@ -103,6 +103,10 @@ class QuerySpec:
 QUERIES: dict[str, QuerySpec] = {}
 _SEQ = 0
 
+#: how many leading ``queries()`` entries the external driver's
+#: correctness harness enumerates (see :func:`register`)
+DRIVER_WINDOW = 50
+
 
 def register(
     name: str,

@@ -3,9 +3,15 @@
 A scheduled CDC poller mostly runs no-op loads, so the watermark probes
 must not cost jobs: the source probe reads the parquet footer, the local
 probe reads the ``latest_pk_version`` commit, and the source schema is
-inferred once. Jobs are counted from the DAG scheduler's job-id counter
-(as ``perfbench`` does), so jobs the engine starts from pool threads are
-counted too.
+inferred once. A changed load derives its strange updates, deletes and
+new key index from one key diff (one shuffle). Jobs are counted from the
+DAG scheduler's job-id counter (as ``perfbench`` does), so jobs the
+engine starts from pool threads are counted too.
+
+The equivalence tests at the end run the same load sequences through a
+copy of the earlier three-cascade algorithm (an ``exceptAll`` probe,
+``latest_pk_union`` + ``deletes_keys`` for the deletes, and a second
+``latest_pk_union`` for the index) and require equal tables.
 """
 
 from __future__ import annotations
@@ -31,7 +37,7 @@ from odbc2deltalake_spark.plans.db_to_delta import (
 from odbc2deltalake_spark.tablestore import TableStore, VersionedParquetTable
 
 NOOP_BUDGET = 2
-DELTA_BUDGET = 20
+DELTA_BUDGET = 9
 
 
 class _Rows:
@@ -243,3 +249,445 @@ def test_stream_batch_merges_the_key_index_once(spark, tmp_path, monkeypatch):
     assert (lpk.version(), hist.version()) == (v0 + 1, h0 + 1)
     assert jobs <= STREAM_REDELIVERY_BUDGET, jobs
     assert _current(spark, dest) == want
+
+
+# ------------------------------------------------------------ key diff --
+
+
+def test_warm_load_diffs_the_key_sets_in_one_shuffle(
+    spark, tmp_path, loaded, monkeypatch
+):
+    """A warm delta load reads primary_keys_ts and latest_pk@old in one
+    hash exchange (the key diff), and neither the 0-strange nor the
+    key-set-join path runs ``exceptAll`` or ``latest_pk_union``."""
+    from pyspark.sql import DataFrame
+
+    from odbc2deltalake_spark.plans import db_to_delta as mod
+
+    table, dest = loaded
+    diffs = []
+    real_diff = mod.key_diff
+
+    def spy(*a, **kw):
+        diffs.append(real_diff(*a, **kw))
+        return diffs[-1]
+
+    def forbidden(*a, **kw):
+        raise AssertionError("three-cascade operator on the load path")
+
+    monkeypatch.setattr(mod, "key_diff", spy)
+    monkeypatch.setattr(mod, "latest_pk_union", forbidden)
+    monkeypatch.setattr(DataFrame, "exceptAll", forbidden)
+    d = DeltaDestination(dest)
+
+    table.change(update=[1, 2], insert=[302], delete=[10])
+    res, _ = _load(spark, table.write(str(tmp_path / "s2.parquet")), dest)
+    assert isinstance(res, DeltaLoadResult) and not res.dirty
+    assert d.delta_2.read(spark).count() == 0
+    plan = diffs[-1]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange hashpartitioning" in plan
+    files = diffs[-1].inputFiles()
+    for table_dir in ("primary_keys_ts", "latest_pk_version", "delta_1"):
+        assert any(f"/{table_dir}/" in f for f in files), table_dir
+
+    # a backdated version of key 7: below the watermark, so only the
+    # key-set join can load it
+    table.rows[7] = ("back", 3)
+    table.change(update=[4])
+    res, _ = _load(spark, table.write(str(tmp_path / "s3.parquet")), dest)
+    assert isinstance(res, DeltaLoadResult) and not res.dirty
+    assert [r["id"] for r in d.delta_2.read(spark).collect()] == [7]
+    assert len(diffs) == 2
+    want = sorted((i, v, rv) for i, (v, rv) in table.rows.items())
+    assert _current(spark, dest) == want
+
+
+def test_delta_2_reset_only_when_not_already_empty(spark, tmp_path, loaded):
+    """A plain warm load commits no delta_2 version (it is already empty);
+    the load after a key-set fetch still empties it."""
+    table, dest = loaded
+    d2 = DeltaDestination(dest).delta_2
+    v0 = d2.version()
+    table.change(update=[3])
+    _load(spark, table.write(str(tmp_path / "s2.parquet")), dest)
+    assert d2.version() == v0
+
+    table.rows[8] = ("back", 4)
+    table.change(update=[5])
+    _load(spark, table.write(str(tmp_path / "s3.parquet")), dest)
+    assert d2.version() == v0 + 1
+    assert d2.read(spark).count() == 1
+
+    table.change(update=[6])
+    res, _ = _load(spark, table.write(str(tmp_path / "s4.parquet")), dest)
+    assert isinstance(res, DeltaLoadResult) and not res.dirty
+    assert d2.version() == v0 + 2
+    assert d2.read(spark).count() == 0
+    assert d2.schema() == DeltaDestination(dest).delta_1.schema()
+    want = sorted((i, v, rv) for i, (v, rv) in table.rows.items())
+    assert _current(spark, dest) == want
+
+
+# ------------------------------------------- equivalence with the cascades --
+#
+# The earlier algorithm, kept here only as the reference the key diff must
+# reproduce: step 3 probed with ``pk_ts EXCEPT ALL latest_pk@old``, the
+# deletes rebuilt ``latest_pk_union`` and anti-joined the old index, and
+# step 4 rebuilt the union once more. The functions plug into
+# ``do_delta_load`` in place of ``_key_diff``, ``_act_additional_updates``,
+# ``_do_deletes`` and ``_write_latest_pk``, so both algorithms run under the
+# same phase order and overlap.
+
+
+class _CascadeState:
+    def __init__(self, old_pk_version, probe):
+        self.old_pk_version = old_pk_version
+        self.probe = probe
+        self.rewind_wm = None
+
+
+def _cascade_probe(ctx, old_pk_version):
+    dest = ctx.dest
+    sel = ctx.pk_names + [ctx.delta_name]
+    pk_ts = dest.primary_keys_ts.read(ctx.spark).select(*sel)
+    old_lpk = dest.latest_pk_version.read(ctx.spark, version=old_pk_version).select(*sel)
+    additional = pk_ts.exceptAll(old_lpk)
+    d1_keys = dest.delta_1.read(ctx.spark).select(*ctx.pk_names)
+    real_additional = (
+        additional.select(*ctx.pk_names)
+        .join(d1_keys, on=ctx.pk_names, how="left_anti")
+        .distinct()
+    )
+    additional = additional.localCheckpoint(eager=False)
+    real_additional = real_additional.localCheckpoint(eager=False)
+    update_count = real_additional.count()
+    if update_count == 0:
+        dest.delta_2.write_empty(ctx.spark, dest.delta_1.schema())
+        return _CascadeState(old_pk_version, None)
+    return _CascadeState(
+        old_pk_version, (additional, real_additional, update_count)
+    )
+
+
+def _cascade_act(ctx, st):
+    import datetime
+
+    from odbc2deltalake_spark.functions.projection import with_system_cols
+    from odbc2deltalake_spark.plans import db_to_delta as mod
+    from pyspark.sql import functions as F
+
+    if st.probe is None:
+        return st
+    additional, real_additional, update_count = st.probe
+    dest = ctx.dest
+    if update_count > ctx.cfg.max_complex_entries or ctx.cfg.no_complex_entries_load:
+        dest.delta_2.write_empty(ctx.spark, dest.delta_1.schema())
+        rewind_wm = additional.agg(F.min(ctx.delta_name).alias("m")).first()["m"]
+        changed = ctx.source.read_where_ge(
+            ctx.spark, mod._source_delta_name(ctx), rewind_wm
+        )
+        rows = with_system_cols(
+            ctx.extract(changed),
+            ctx.load_ts + datetime.timedelta(microseconds=1),
+            is_deleted=False,
+            is_full_load=False,
+        )
+        _, n, mm = dest.delta_1.write_counted_minmax(
+            rows, [ctx.delta_name], mode="overwrite"
+        )
+        if n:
+            ctx.append_history(
+                dest.delta_1.read(ctx.spark), delta_interval=mm.get(ctx.delta_name)
+            )
+        st.rewind_wm = rewind_wm
+        return st
+    src_keys = real_additional.select(
+        *[F.col(n).alias(mod._source_name(ctx, n)) for n in ctx.pk_names]
+    )
+    fetched = ctx.source.read_for_keys(
+        ctx.spark, src_keys, [mod._source_name(ctx, n) for n in ctx.pk_names]
+    )
+    rows = with_system_cols(
+        ctx.extract(fetched), ctx.load_ts, is_deleted=False, is_full_load=False
+    )
+    _, n, mm = dest.delta_2.write_counted_minmax(
+        rows, [ctx.delta_name], mode="overwrite"
+    )
+    if n:
+        ctx.append_history(
+            dest.delta_2.read(ctx.spark), delta_interval=mm.get(ctx.delta_name)
+        )
+    return st
+
+
+def _cascade_union(ctx, delta_load_value=None):
+    from odbc2deltalake_spark.operators.scd2 import latest_pk_union
+
+    dest = ctx.dest
+    return latest_pk_union(
+        dest.delta_2.read(ctx.spark) if dest.delta_2.exists() else None,
+        dest.delta_1.read(ctx.spark),
+        dest.primary_keys_ts.read(ctx.spark),
+        ctx.pk_names,
+        ctx.delta_name,
+        delta_load_value=delta_load_value,
+    )
+
+
+def _cascade_deletes(ctx, st):
+    from odbc2deltalake_spark.functions.projection import tombstone_projection
+    from odbc2deltalake_spark.operators.scd2 import deletes_keys
+
+    dest = ctx.dest
+    old_lpk = dest.latest_pk_version.read(ctx.spark, version=st.old_pk_version)
+    dels = deletes_keys(old_lpk, _cascade_union(ctx), ctx.pk_names)
+    schema = {f.name: f.dataType for f in dest.delta_1.schema().fields}
+    ctx.append_history(
+        tombstone_projection(
+            dels, ctx.all_target_names, ctx.pk_names, schema, ctx.load_ts
+        )
+    )
+
+
+def _cascade_index(ctx, st, delta_load_value):
+    wm = st.rewind_wm if st.rewind_wm is not None else delta_load_value
+    _, n, _ = ctx.dest.latest_pk_version.write_counted_minmax(
+        _cascade_union(ctx, wm), [ctx.delta_name], mode="overwrite"
+    )
+    return n
+
+
+def _use_cascades(m):
+    from odbc2deltalake_spark.plans import db_to_delta as mod
+
+    m.setattr(mod, "_key_diff", _cascade_probe)
+    m.setattr(mod, "_act_additional_updates", _cascade_act)
+    m.setattr(mod, "_do_deletes", _cascade_deletes)
+    m.setattr(mod, "_write_latest_pk", _cascade_index)
+
+
+def _tables(spark, dest):
+    """History (tombstones included), tombstones, latest_pk_version and
+    delta_2 as sorted row lists. ``__timestamp`` is each load's wall
+    clock, so the history carries its rank instead."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    d = DeltaDestination(dest)
+
+    def rows(df):
+        return df.columns, sorted((tuple(r) for r in df.collect()), key=repr)
+
+    hist = d.delta.read(spark)
+    hist = hist.withColumn(
+        "__load_rank", F.dense_rank().over(Window.orderBy("__timestamp"))
+    ).drop("__timestamp")
+    return {
+        "history": rows(hist),
+        "tombstones": rows(hist.filter("__is_deleted")),
+        "latest_pk_version": (
+            d.latest_pk_version.schema().simpleString(),
+            rows(d.latest_pk_version.read(spark)),
+        ),
+        "delta_2": d.delta_2.exists()
+        and rows(d.delta_2.read(spark).drop("__timestamp")),
+    }
+
+
+def _user_rows(spark, rows, schema=None):
+    from tests.cdc_utils import USER_SCHEMA
+
+    return spark.createDataFrame(rows, schema or USER_SCHEMA)
+
+
+V1 = [
+    (1, "John", "Anders", 32.0, "c1", 1000),
+    (2, "Peter", "Johniingham", 41.0, "c1", 1001),
+    (3, "Petra", "wayne", 28.0, "c2 ", 1002),
+]
+
+
+def _seq_no_strange(spark, src, run):
+    yield run(src)
+    src.set_df(_user_rows(spark, [V1[0], (2, "Peter", "J", 42.0, "c1", 1003),
+                                  V1[2], (4, "Marie", "Curie", 66.0, "c3", 1004)]))
+    yield run(src)
+    src.set_df(_user_rows(spark, [(1, "Jon", "Anders", 32.0, "c1", 1005),
+                                  (2, "Peter", "J", 42.0, "c1", 1003),
+                                  V1[2], (4, "Marie", "Curie", 66.0, "c3", 1004)]))
+    yield run(src)
+
+
+def _seq_strange(n_extra):
+    def seq(spark, src, run):
+        yield run(src)
+        extra = [
+            (100 + i, f"Extra{i}", "Strange", 1.0 * i, "cx", 500 + i)
+            for i in range(n_extra)
+        ]
+        src.set_df(_user_rows(spark, [V1[0], (2, "Pietro", "J", 41.0, "c1", 900),
+                                      V1[2], (4, "Marie", "Curie", 66.0, "c3", 1003)]
+                              + extra))
+        yield run(src)
+        src.set_df(_user_rows(spark, [V1[0], (2, "Pietro", "J", 41.0, "c1", 900),
+                                      (3, "Petra", "Wayne", 28.0, "c2", 1004),
+                                      (4, "Marie", "Curie", 66.0, "c3", 1003)]
+                              + extra))
+        yield run(src)
+
+    return seq
+
+
+def _seq_deletes(spark, src, run):
+    yield run(src)
+    src.set_df(_user_rows(spark, [(2, "Peter", "J", 42.0, "c1", 1003),
+                                  (4, "Marie", "Curie", 66.0, "c3", 1004)]))
+    yield run(src)
+    src.set_df(_user_rows(spark, [(4, "Marie", "Curie", 66.0, "c3", 1004)]))
+    yield run(src)
+    src.set_df(_user_rows(spark, []))  # the source table emptied
+    yield run(src)
+
+
+def _seq_delete_reinsert(spark, src, run):
+    yield run(src)
+    src.set_df(_user_rows(spark, V1[:2] + [(4, "Marie", "Curie", 66.0, "c3", 1003)]))
+    yield run(src)
+    # key 3 comes back with a fresh rowversion
+    src.set_df(_user_rows(spark, V1[:2] + [(3, "Petra", "New", 29.0, "c2", 1004),
+                                           (4, "Marie", "Curie", 66.0, "c3", 1003)]))
+    yield run(src)
+    src.set_df(_user_rows(spark, V1[:2] + [(4, "Marie", "Curie", 66.0, "c3", 1003)]))
+    yield run(src)
+    # and once with its old one, below the watermark
+    src.set_df(_user_rows(spark, V1 + [(4, "Marie", "Curie", 66.0, "c3", 1003)]))
+    yield run(src)
+
+
+def _seq_insert_between_steps(spark, src, run):
+    yield run(src)
+    rows2 = V1 + [(4, "Marie", "Curie", 66.0, "c3", 1004)]
+    mid = rows2 + [(5, "Late", "Arrival", 1.0, "c9", 2000)]
+    src.set_df(_user_rows(spark, rows2))
+    # key 5 is visible to the key snapshot only: its ts lies past the
+    # watermark, so the cap keeps it out of this load's index
+    src.between_stages = lambda tag, df: _user_rows(
+        spark, mid if tag == "read_keys" else rows2
+    )
+    yield run(src)
+    src.between_stages = None
+    src.set_df(_user_rows(spark, rows2 + [(5, "Late", "Arrival", 1.0, "c9", 2001)]))
+    yield run(src)
+
+
+def _nullable_source(spark):
+    from pyspark.sql import types as T
+
+    from tests.cdc_utils import USER_COLS, ColInfo, DataFrameSource, USER_SCHEMA
+
+    schema = T.StructType(
+        USER_SCHEMA.fields[:-1] + [T.StructField("time stamp", T.LongType(), True)]
+    )
+    cols = USER_COLS[:-1] + [ColInfo("time stamp", T.LongType(), "bigint", True)]
+    return DataFrameSource(
+        spark.createDataFrame(V1, schema), cols, primary_keys=["User - iD"]
+    )
+
+
+def _seq_null_delta_value(spark, src, run):
+    schema = src.df.schema
+    yield run(src)
+    src.set_df(_user_rows(spark, [V1[0], (2, "Peter", "J", 41.0, "c1", None),
+                                  V1[2], (4, "Nadia", "Null", 50.0, "c9", None)],
+                          schema))
+    yield run(src)
+    src.set_df(_user_rows(spark, [V1[0], (2, "Peter", "J", 41.0, "c1", None),
+                                  (3, "Petra", "w", 28.0, "c2", 1003),
+                                  (4, "Nadia", "Null", 50.0, "c9", None)],
+                          schema))
+    yield run(src)
+
+
+def _drift_shape(spark, precision):
+    """An ``id, amount decimal(precision, 3), rv`` source table and its
+    column infos; the wider shape changes one row and inserts one."""
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    from tests.cdc_utils import ColInfo
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType(), False),
+        T.StructField("amount", T.DecimalType(precision, 3), True),
+        T.StructField("rv", T.LongType(), False),
+    ])
+    cols = [
+        ColInfo("id", T.LongType(), "bigint", False),
+        ColInfo("amount", T.DecimalType(precision, 3), f"decimal({precision},3)"),
+        ColInfo("rv", T.LongType(), "rowversion", False),
+    ]
+    rows = {
+        15: [(1, Decimal("1.5"), 10), (2, Decimal("2.5"), 11), (3, Decimal("3.5"), 12)],
+        20: [(1, Decimal("1.5"), 10), (2, Decimal("12345678901234567.25"), 13),
+             (4, Decimal("4.5"), 14)],
+    }[precision]
+    return spark.createDataFrame(rows, schema), cols
+
+
+def _seq_schema_drift(spark, src, run):
+    yield run(src)
+    src.set_df(*_drift_shape(spark, 20))
+    yield run(src)
+
+
+def _parity_source(spark, name):
+    from tests.cdc_utils import DataFrameSource, make_source
+
+    if name == "null_delta_value":
+        return _nullable_source(spark)
+    if name == "schema_drift":
+        return DataFrameSource(*_drift_shape(spark, 15), primary_keys=["id"])
+    return make_source(spark)
+
+
+_PARITY = {
+    "no_strange": (_seq_no_strange, {}),
+    "keyset_strange": (_seq_strange(0), {}),
+    "rewind_strange": (_seq_strange(3), dict(max_complex_entries=2)),
+    "deletes": (_seq_deletes, {}),
+    "delete_then_reinsert": (_seq_delete_reinsert, {}),
+    "insert_between_steps": (_seq_insert_between_steps, {}),
+    "null_delta_value": (_seq_null_delta_value, dict(delta_col="time stamp")),
+    "schema_drift": (_seq_schema_drift, {}),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PARITY))
+def test_key_diff_matches_the_cascades(spark, tmp_path, monkeypatch, name):
+    """Each load of the sequence leaves the history, its tombstones,
+    latest_pk_version and delta_2 equal to what the three-cascade
+    algorithm writes for the same sources."""
+    from tests.cdc_utils import run_load
+
+    seq, cfg = _PARITY[name]
+    dests = {side: str(tmp_path / side) for side in ("diff", "cascade")}
+
+    def runner(side):
+        return lambda src: run_load(
+            spark, src, dests[side], WriteConfig(**cfg), check=False
+        )[1]
+
+    loads = {
+        side: seq(spark, _parity_source(spark, name), runner(side))
+        for side in dests
+    }
+    for step, got in enumerate(loads["diff"]):
+        with monkeypatch.context() as m:
+            _use_cascades(m)
+            want = next(loads["cascade"])
+        assert type(got) is type(want), step
+        assert getattr(got, "dirty", None) == getattr(want, "dirty", None), step
+        assert _tables(spark, dests["diff"]) == _tables(spark, dests["cascade"]), step
+    assert next(loads["cascade"], None) is None

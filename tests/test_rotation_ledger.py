@@ -306,3 +306,19 @@ def test_bench_trend_is_contiguous_with_method_tags():
             assert r["raw_total_sec"] is None  # never invented
         else:
             assert r["raw_total_sec"] is not None
+
+
+def test_evicted_rows_are_only_previously_green_ones():
+    """Eviction verification covers the rows whose hash matched in the
+    last driver round and that left the window; a failed row was never
+    green there."""
+    from tools.round_close import evicted_green
+
+    last = {
+        "kept": {"hash_match": True},
+        "moved_out": {"hash_match": True},
+        "failed_out": {"hash_match": False},
+        "rows_only_out": {"hash_match": None},
+    }
+    assert evicted_green(last, {"kept"}) == ["moved_out"]
+    assert evicted_green(last, set(last)) == []

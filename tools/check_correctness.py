@@ -22,7 +22,7 @@ import duckdb
 
 import __spark_entry__ as entrymod
 from odbc2deltalake_spark.session import get_spark
-from odbc2deltalake_spark.queries.registry import TABLE_NAMES
+from odbc2deltalake_spark.queries.registry import DRIVER_WINDOW, TABLE_NAMES
 
 
 def canon(v) -> str:
@@ -84,8 +84,9 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     if window:
-        # the external driver enumerates exactly the first 50 entries
-        keep = list(qs)[:50]
+        # the external driver enumerates exactly the first DRIVER_WINDOW
+        # entries
+        keep = list(qs)[:DRIVER_WINDOW]
         if "--flagships" in flags:
             # VERDICT r10 #6: flagship-tagged OVERFLOW entries keep
             # sf0.1 oracle coverage across rotation churn — eviction

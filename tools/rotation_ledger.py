@@ -77,7 +77,7 @@ def build_ledger() -> dict[str, dict]:
 
     registry.load_all()
     specs = registry.ordered_specs()
-    window = {s.name for s in specs[:50]}
+    window = {s.name for s in specs[: registry.DRIVER_WINDOW]}
     registered = {s.name for s in specs}
 
     ledger: dict[str, dict] = {}

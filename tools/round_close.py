@@ -82,6 +82,15 @@ def _recovered_extras(tail: str) -> dict[str, list[float]]:
     return out
 
 
+def evicted_green(last_round: dict, window_now: set) -> list[str]:
+    """Queries the last driver CORRECTNESS round verified green — its
+    hash matched the oracle — that the current window no longer holds.
+    A row that failed there was never green, so eviction loses nothing
+    for it."""
+    green = {n for n, row in last_round.items() if row.get("hash_match") is True}
+    return sorted(green - window_now)
+
+
 def agreement_verdict(
     prev: dict, cur: dict, thr: float = 0.05
 ) -> tuple[str, dict[str, float]]:
@@ -439,7 +448,7 @@ def main() -> int:
 
     # 3b. evicted-row verification (VERDICT r14 #7): every query that was
     # green in the LATEST driver CORRECTNESS round but now sits OUTSIDE
-    # the 50-entry window (i.e. evicted by a rotation this round) gets
+    # the driver window (i.e. evicted by a rotation this round) gets
     # one committed sf0.01 comparator run, so "still green after
     # eviction" is an in-tree artifact rather than the builder's word.
     # Runs Spark only under --full/--sf01; plain mode audits the file.
@@ -452,9 +461,10 @@ def main() -> int:
         from odbc2deltalake_spark.queries import registry as _reg2
 
         _reg2.load_all()
-        window_now = {s.name for s in _reg2.ordered_specs()[:50]}
-        last_round = json.loads(corr[-1].read_text())
-        evicted = sorted(set(last_round) - window_now)
+        window_now = {
+            s.name for s in _reg2.ordered_specs()[: _reg2.DRIVER_WINDOW]
+        }
+        evicted = evicted_green(json.loads(corr[-1].read_text()), window_now)
         if evicted and ("--full" in sys.argv or "--sf01" in sys.argv):
             r = subprocess.run(
                 [sys.executable, "tools/check_correctness.py",
