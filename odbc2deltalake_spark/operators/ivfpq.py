@@ -221,14 +221,16 @@ class IvfPqIndex:
         TakeOrdered; with ``rerank_vectors`` the candidate ids fetch
         their raw rows via broadcast semi-join for exact scoring.
 
-        Coverage note (ADVICE r13): every ORACLED registry row calls
-        this in the exact-equivalence configuration (probe-everything +
-        full-slice rerank), which takes the skip branch below — the
-        bounded ADC LUT path (nprobe < cells or candidates < slice) is
+        Coverage note (ADVICE r13): the oracled registry rows but one
+        call this in the exact-equivalence configuration (probe-everything +
+        full-slice rerank), which takes the skip branch below. The
+        bounded ADC LUT path (nprobe < cells or candidates < slice) runs
+        under the oracle in the ``sim_ann_ivfpq_adc`` row (candidates =
+        n // 2, so the exact top-10 must survive the ADC cut) and is
         pinned by unit tests (tests/test_ivfpq.py: ADC == from-scratch
-        numpy residual distances; recall floors on trained builds), not
-        by a SQL oracle: ADC distances are quantizer-dependent, so no
-        fixture-independent SQL can recompute them."""
+        numpy residual distances; recall floors on trained builds). ADC
+        distances themselves are quantizer-dependent, so no
+        fixture-independent SQL recomputes them."""
         q_orig = [float(x) for x in query_vec]
         q = q_orig
         rot = self._load_rotation(spark)

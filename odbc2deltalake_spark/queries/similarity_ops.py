@@ -768,8 +768,8 @@ def sim_ann_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-scores it), so the in-query build uses seed-initialized cells
     # and codebooks — this row pins the PERSISTED-INDEX machinery
     # (partitioned cells, commit-logged tables, exact-mode search path;
-    # the bounded ADC branch is unit-test-only, see operators/ivfpq.py
-    # search() coverage note); trained quantizers with recall floors are
+    # the bounded ADC branch runs under the oracle in the
+    # sim_ann_ivfpq_adc row below); trained quantizers with recall floors are
     # pinned by tests/test_ivfpq.py and the sim_ann_opq row.
     # 51.2s -> ~12s at the sf0.1 sweep.
     ncent = max(4, min(int(n ** 0.5), 16))

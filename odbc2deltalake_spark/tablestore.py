@@ -38,13 +38,14 @@ its local/Azure implementations).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import uuid
 from abc import ABC, abstractmethod
 from pathlib import Path
-from typing import Any, Iterable, Optional
+from typing import Any, Iterable, Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -88,7 +89,7 @@ class ChangeFeedTruncatedError(ValueError):
     this check the read plans fine (commit JSONs outlive their data) and
     dies mid-execution with an executor FileNotFound — opaque and
     possibly AFTER the consumer produced partial effects. Raised at plan
-    time instead, naming the cursor and the missing version, so the
+    time instead, naming the missing version and dir, so the
     consumer can re-baseline from a snapshot read — the same recovery
     Delta CDF prescribes when `delta.logRetentionDuration` outlives
     `deletedFileRetentionDuration`. Subclasses ValueError so re-baseline
@@ -695,6 +696,47 @@ def _relax_nullability(dt: T.DataType) -> T.DataType:
             ]
         )
     return dt
+
+
+def _conform(
+    df: DataFrame,
+    target: T.StructType,
+    *extra: Any,
+    have: Optional[Iterable[str]] = None,
+) -> DataFrame:
+    """Project ``df`` onto ``target``: each target column cast to its
+    nullability-relaxed type, NULL when ``have`` (default: ``df``'s
+    columns) lacks it. ``extra`` columns ride along after them."""
+    have = set(df.columns if have is None else have)
+    return df.select(
+        *[
+            (F.col(f.name) if f.name in have else F.lit(None))
+            .cast(_relax_nullability(f.dataType))
+            .alias(f.name)
+            for f in target.fields
+        ],
+        *extra,
+    )
+
+
+def _union_all(
+    spark: SparkSession, parts: list[DataFrame], empty: T.StructType
+) -> DataFrame:
+    """unionByName over ``parts`` in order; no parts is an empty frame
+    of schema ``empty``."""
+    if not parts:
+        return spark.createDataFrame([], empty)
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+_REBASELINE = "re-baseline from read(version=...) and skip the cursor forward"
+
+
+def _unrepresentable(v: int, mode: str) -> ValueError:
+    return ValueError(
+        f"version {v} is a {mode} commit — not representable as a change "
+        f"feed; {_REBASELINE}"
+    )
 
 
 class VersionedParquetTable(TableStore):
@@ -1664,27 +1706,16 @@ class VersionedParquetTable(TableStore):
                 # union — same rows, one scan node per dir
                 if "CONFLICTING_DIRECTORY_STRUCTURES" not in str(e) or len(paths) == 1:
                     raise
-                dfs = [spark.read.schema(written).parquet(p) for p in paths]
-                df = dfs[0]
-                for other in dfs[1:]:
-                    df = df.unionByName(other)
-            written_names = set(written.fieldNames())
-            df = df.select(
-                *[
-                    (
-                        F.col(f.name).cast(_relax_nullability(f.dataType))
-                        if f.name in written_names
-                        else F.lit(None).cast(_relax_nullability(f.dataType))
-                    ).alias(f.name)
-                    for f in target.fields
-                ]
-            )
+                df = _union_all(
+                    spark,
+                    [spark.read.schema(written).parquet(p) for p in paths],
+                    written,
+                )
+            df = _conform(df, target, have=written.fieldNames())
             for i in msig:
                 df = self._mask_apply(df, masks[i], target)
             parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        out = _union_all(spark, parts, target)
         if patches:
             out = self._reconcile_patches(spark, out, st, buckets)
         return self._apply_skip_filter(out, skip_where)
@@ -1709,25 +1740,12 @@ class VersionedParquetTable(TableStore):
         for p in patches:
             written = T.StructType.fromJson(json.loads(p["schema"]))
             raw = spark.read.schema(written).parquet(self._path(p["dir"]))
-            have = set(raw.columns)
             parts.append(
-                raw.select(
-                    *[
-                        (
-                            F.col(f.name).cast(_relax_nullability(f.dataType))
-                            if f.name in have
-                            else F.lit(None).cast(
-                                _relax_nullability(f.dataType)
-                            )
-                        ).alias(f.name)
-                        for f in target.fields
-                    ],
-                    F.col(_PATCH_DEL_COL),
-                ).withColumn("__patch_v", F.lit(p["version"]).cast("long"))
+                _conform(raw, target, F.col(_PATCH_DEL_COL)).withColumn(
+                    "__patch_v", F.lit(p["version"]).cast("long")
+                )
             )
-        pdf = parts[0]
-        for p in parts[1:]:
-            pdf = pdf.unionByName(p)
+        pdf = _union_all(spark, parts, target)
         if buckets is not None:
             key_cols = st["bucket_cols"] or []
             kt = self._bucket_key_schema(st, key_cols)
@@ -2157,17 +2175,7 @@ class VersionedParquetTable(TableStore):
                 new_schema = merged
             else:
                 # align to existing schema (missing cols -> null)
-                have = set(df.columns)
-                df = df.select(
-                    *[
-                        (
-                            F.col(f.name).cast(_relax_nullability(f.dataType))
-                            if f.name in have
-                            else F.lit(None).cast(_relax_nullability(f.dataType))
-                        ).alias(f.name)
-                        for f in old_schema.fields
-                    ]
-                )
+                df = _conform(df, old_schema)
                 new_schema = old_schema
         dir_name = f"d{new_version:010d}-{uuid.uuid4().hex[:8]}"
         obs = None
@@ -3038,19 +3046,7 @@ class VersionedParquetTable(TableStore):
         for d in st["dirs"]:
             if d["dir"] not in masked_names:
                 continue
-            written = T.StructType.fromJson(json.loads(d["schema"]))
-            r = spark.read.schema(written).parquet(self._path(d["dir"]))
-            have = set(r.columns)
-            out_df = r.select(
-                *[
-                    (
-                        F.col(f.name).cast(_relax_nullability(f.dataType))
-                        if f.name in have
-                        else F.lit(None).cast(_relax_nullability(f.dataType))
-                    ).alias(f.name)
-                    for f in target.fields
-                ]
-            )
+            out_df = self._read_dir_entries(spark, [d], target)
             for i, s in enumerate(mask_dirsets):
                 if d["dir"] in s:
                     out_df = self._mask_apply(out_df, masks[i], target)
@@ -3292,35 +3288,10 @@ class VersionedParquetTable(TableStore):
         bucket_rows = dict(st["bucket_rows"] or {})
         rows_changed = 0
         written_dirs: list[str] = []
-        tnames = set(target.fieldNames())
         for bucket, ds in sorted(
             groups.items(), key=lambda kv: (kv[0] is None, kv[0])
         ):
-            parts = []
-            for d in ds:
-                written = T.StructType.fromJson(json.loads(d["schema"]))
-                r = spark.read.schema(written).parquet(self._path(d["dir"]))
-                have = set(r.columns)
-                parts.append(
-                    r.select(
-                        *[
-                            (
-                                F.col(f.name).cast(
-                                    _relax_nullability(f.dataType)
-                                )
-                                if f.name in have
-                                else F.lit(None).cast(
-                                    _relax_nullability(f.dataType)
-                                )
-                            ).alias(f.name)
-                            for f in target.fields
-                            if f.name in tnames
-                        ]
-                    )
-                )
-            src = parts[0]
-            for p in parts[1:]:
-                src = src.unionByName(p)
+            src = self._read_dir_entries(spark, ds, target)
             obs_tot, obs_kept = Observation(), Observation()
             src = src.observe(
                 obs_tot,
@@ -3590,30 +3561,7 @@ class VersionedParquetTable(TableStore):
         if not affected:
             return st["version"]  # nothing to rewrite: no commit
         target = T.StructType.fromJson(json.loads(st["schema"]))
-        tnames = set(target.fieldNames())
-        parts = []
-        for d in affected:
-            written = T.StructType.fromJson(json.loads(d["schema"]))
-            r = spark.read.schema(written).parquet(self._path(d["dir"]))
-            have = set(r.columns)
-            parts.append(
-                r.select(
-                    *[
-                        (
-                            F.col(f.name).cast(_relax_nullability(f.dataType))
-                            if f.name in have
-                            else F.lit(None).cast(
-                                _relax_nullability(f.dataType)
-                            )
-                        ).alias(f.name)
-                        for f in target.fields
-                        if f.name in tnames
-                    ]
-                )
-            )
-        src = parts[0]
-        for p in parts[1:]:
-            src = src.unionByName(p)
+        src = self._read_dir_entries(spark, affected, target)
         n = out_partitions
         if n is None:
             total = sum(
@@ -3636,7 +3584,7 @@ class VersionedParquetTable(TableStore):
             for d in affected:
                 for s_ in (d.get("stats") or {}).values():
                     sc |= set(s_)
-            stats_cols = sorted(c for c in sc if c in tnames)
+            stats_cols = sorted(sc & set(target.fieldNames()))
         new_version = st["version"] + 1
         dir_name = f"d{new_version:010d}-{uuid.uuid4().hex[:8]}"
         src.write.mode("overwrite").parquet(self._path(dir_name))
@@ -3692,9 +3640,7 @@ class VersionedParquetTable(TableStore):
         reads the JSON log, never the data."""
         out = []
         for name in reversed(self._commit_names()):
-            c = json.loads(
-                self.backend.read_text(self.backend.join(self._commits_dir, name))
-            )
+            c = self._read_commit(int(name.split(".")[0]))
             out.append(
                 {
                     k: (
@@ -3705,6 +3651,80 @@ class VersionedParquetTable(TableStore):
                 }
             )
         return out
+
+    # ---------- change feeds ----------
+    # read_changes, read_changes_cdf and read_changes_fold project one
+    # walker, _feed_commits; docs/commit-format.md §"Change feeds" has
+    # the table of what each feed emits, skips or raises per commit kind.
+
+    def _feed_commits(
+        self, from_version: int, to_version: int
+    ) -> Iterator[tuple[int, dict[str, Any]]]:
+        """``(version, commit)`` for each commit in ``(from_version,
+        to_version]`` that may change rows, in version order.
+
+        Log holes in the range raise ChangeFeedTruncatedError BEFORE any
+        commit is read: silently skipping them would deliver a feed
+        missing those commits' rows, and a surviving patch/mask commit
+        whose prior state falls below the cut would otherwise surface as
+        TruncatedLogError ('state unrecoverable') — the wrong signal for
+        a merely-lagging cursor, and one the MV/tailer re-baseline
+        handlers do not treat as recoverable.
+
+        Rows-preserving rewrites are dropped: OPTIMIZE (``compacted_from``),
+        tombstone materialization (``masks_folded``) and pure
+        ``fold_patches`` (``patches_folded``) leave the row set unchanged
+        by construction, so they contribute zero change rows — Delta CDF
+        likewise emits nothing for OPTIMIZE — and a nightly compaction
+        does not force every downstream consumer into a re-baseline.
+        Metadata-only appends (``set_properties``) are dropped too; every
+        other append's data dir must still exist."""
+        have = [
+            v
+            for v in (int(n.split(".")[0]) for n in self._commit_names())
+            if from_version < v <= to_version
+        ]
+        missing = sorted(set(range(from_version + 1, to_version + 1)) - set(have))
+        if missing:
+            shown = missing[:5] + (["..."] if len(missing) > 5 else [])
+            raise ChangeFeedTruncatedError(
+                f"change feed truncated: commits {shown} in "
+                f"({from_version}, {to_version}] were removed by log "
+                f"truncation — {_REBASELINE}"
+            )
+        for v in have:
+            c = self._read_commit(v)
+            if c["mode"] == "append":
+                if not c.get("dir"):
+                    continue
+                self._require_dir(v, c["dir"], "data dir")
+            elif any(
+                k in c
+                for k in ("compacted_from", "masks_folded", "patches_folded")
+            ):
+                continue
+            yield v, c
+
+    def _require_dir(self, v: int, d: str, what: str) -> None:
+        """Raise ChangeFeedTruncatedError at plan time when version
+        ``v``'s ``what`` ``d`` was vacuumed. Commit JSONs outlive their
+        data dirs, so without this the read plans fine and dies at
+        execution with an executor FileNotFound that names no recovery
+        action. One control-plane exists() per dir, change-set-sized."""
+        if not self.backend.exists(self._path(d)):
+            raise ChangeFeedTruncatedError(
+                f"change feed truncated: version {v}'s {what} {d!r} was "
+                f"vacuumed (the cursor predates the retention window) — "
+                f"{_REBASELINE}"
+            )
+
+    def _appended(
+        self, spark: SparkSession, c: dict[str, Any], target: T.StructType
+    ) -> DataFrame:
+        """The rows one data append commit added, cast to ``target``."""
+        return self._read_dir_entries(
+            spark, [{"dir": c["dir"], "schema": c["written_schema"]}], target
+        )
 
     def read_changes(
         self,
@@ -3719,96 +3739,34 @@ class VersionedParquetTable(TableStore):
         it saw and reads only the new commits' files: cost scales with
         the change set, never with table size.
 
-        Only plain ``append`` commits are readable as changes; an
-        ``overwrite``/``merge``/``restore`` in the range raises — those
-        commits rewrite rather than add, so their dirs do not represent
-        a delta (the consumer should re-baseline from a snapshot read,
-        exactly like Delta CDF's backfill story).
-
-        Exception: commits tagged ``compacted_from`` are ROWS-PRESERVING
-        rewrites (full or partial OPTIMIZE — layout only, row set
-        unchanged by construction) and contribute zero change rows, so
-        the feed skips them and the cursor advances straight through —
-        Delta CDF likewise emits nothing for OPTIMIZE. Without this, a
-        nightly compaction would force every downstream incremental
-        consumer (tailer, MV, index) into a full re-baseline it does not
-        need.
+        Only plain ``append`` commits are readable as changes; any other
+        commit that changes rows (overwrite, merge, patch, mask, DML,
+        restore) raises ValueError — those commits rewrite rather than
+        add, so their dirs do not represent a delta (the consumer should
+        re-baseline from a snapshot read, exactly like Delta CDF's
+        backfill story). Rows-preserving rewrites and metadata-only
+        commits are skipped and log holes raise
+        :class:`ChangeFeedTruncatedError` (see :meth:`_feed_commits`).
         """
         to_version = self.version() if to_version is None else to_version
         table_schema = self.schema(to_version)
         parts: list[DataFrame] = []
-        seen: set[int] = set()
-        for name in self._commit_names():
-            v = int(name.split(".")[0])
-            if v <= from_version or v > to_version:
-                continue
-            seen.add(v)
-            c = json.loads(
-                self.backend.read_text(self.backend.join(self._commits_dir, name))
-            )
+        for v, c in self._feed_commits(from_version, to_version):
             if c["mode"] != "append":
-                if "compacted_from" in c:
-                    continue  # rows-preserving OPTIMIZE: zero change rows
-                if "masks_folded" in c:
-                    continue  # rows-preserving tombstone materialization
-                if "patches_folded" in c:
-                    # pure fold_patches: the commit rewrites the touched
-                    # buckets to exactly their reconciled prior content —
-                    # rows-preserving by construction, zero change rows
-                    # (the patch commits themselves emitted the changes)
-                    continue
-                raise ValueError(
-                    f"version {v} is a {c['mode']} commit — not representable "
-                    "as a change feed; re-baseline from read(version=...)"
+                raise _unrepresentable(v, c["mode"])
+            parts.append(
+                self._appended(spark, c, table_schema).withColumn(
+                    "_commit_version", F.lit(v).cast("long")
                 )
-            if not c.get("dir"):
-                continue  # metadata-only commit
-            if not self.backend.exists(self._path(c["dir"])):
-                # commit JSONs outlive vacuumed data dirs — fail at plan
-                # time with the recovery action, not at execution with an
-                # executor FileNotFound (one control-plane exists() per
-                # selected commit, change-set-sized)
-                raise ChangeFeedTruncatedError(
-                    f"change feed truncated: version {v}'s data dir "
-                    f"{c['dir']!r} was vacuumed (cursor {from_version} "
-                    "predates the retention window) — re-baseline from "
-                    "read(version=...) and skip the cursor forward"
-                )
-            written = T.StructType.fromJson(json.loads(c["written_schema"]))
-            df = spark.read.schema(written).parquet(self._path(c["dir"]))
-            df = df.select(
-                *[
-                    (
-                        F.col(f.name).cast(_relax_nullability(f.dataType))
-                        if f.name in df.columns
-                        else F.lit(None).cast(_relax_nullability(f.dataType))
-                    ).alias(f.name)
-                    for f in table_schema.fields
-                ]
-            ).withColumn("_commit_version", F.lit(v).cast("long"))
-            parts.append(df)
-        missing = sorted(set(range(from_version + 1, to_version + 1)) - seen)
-        if missing:
-            # truncate_log removed commits inside the requested range:
-            # silently skipping them would deliver a change feed MISSING
-            # those commits' rows — fail with the recovery action instead
-            shown = missing[:5] if len(missing) <= 5 else missing[:5] + ["..."]
-            raise ChangeFeedTruncatedError(
-                f"change feed truncated: commits {shown} in "
-                f"({from_version}, {to_version}] were removed by log "
-                "truncation — re-baseline from read(version=...) and skip "
-                "the cursor forward"
             )
-        if not parts:
-            empty = T.StructType(
+        return _union_all(
+            spark,
+            parts,
+            T.StructType(
                 list(table_schema.fields)
                 + [T.StructField("_commit_version", T.LongType())]
-            )
-            return spark.createDataFrame([], empty)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            ),
+        )
 
     def _read_dir_entries(
         self,
@@ -3818,56 +3776,20 @@ class VersionedParquetTable(TableStore):
     ) -> DataFrame:
         """Cast-union the given live-dir entries (each with its own
         written schema) to the target schema — the shared reader for DML
-        rewrites and the CDF synthesizer."""
-        parts = []
-        for d in entries:
-            written = T.StructType.fromJson(json.loads(d["schema"]))
-            r = spark.read.schema(written).parquet(self._path(d["dir"]))
-            have = set(r.columns)
-            parts.append(
-                r.select(
-                    *[
-                        (
-                            F.col(f.name).cast(_relax_nullability(f.dataType))
-                            if f.name in have
-                            else F.lit(None).cast(
-                                _relax_nullability(f.dataType)
-                            )
-                        ).alias(f.name)
-                        for f in target.fields
-                    ]
+        rewrites, compaction and the change feeds."""
+        return _union_all(
+            spark,
+            [
+                _conform(
+                    spark.read.schema(
+                        T.StructType.fromJson(json.loads(d["schema"]))
+                    ).parquet(self._path(d["dir"])),
+                    target,
                 )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _check_feed_contiguous(
-        self, names: list[str], from_version: int, to_version: int
-    ) -> None:
-        """Raise ChangeFeedTruncatedError BEFORE any commit is
-        processed when the requested range has log holes. Without the
-        upfront check, a surviving patch/mask commit whose prior-state
-        resolution falls below the truncation cut surfaces as
-        TruncatedLogError ('state unrecoverable') — the wrong signal
-        for a merely-lagging cursor, and one the MV/tailer re-baseline
-        handlers do not treat as recoverable."""
-        have = {
-            v
-            for v in (int(n.split(".")[0]) for n in names)
-            if from_version < v <= to_version
-        }
-        missing = sorted(set(range(from_version + 1, to_version + 1)) - have)
-        if missing:
-            shown = (
-                missing[:5] if len(missing) <= 5 else missing[:5] + ["..."]
-            )
-            raise ChangeFeedTruncatedError(
-                f"change feed truncated: commits {shown} in "
-                f"({from_version}, {to_version}] were removed by log "
-                "truncation — re-baseline"
-            )
+                for d in entries
+            ],
+            target,
+        )
 
     def _read_dir_entries_masked(
         self,
@@ -3899,10 +3821,7 @@ class VersionedParquetTable(TableStore):
             for i in sig:
                 df = self._mask_apply(df, masks[i], target)
             parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return _union_all(spark, parts, target)
 
     def _mask_removed(
         self,
@@ -3919,11 +3838,7 @@ class VersionedParquetTable(TableStore):
         update_preimages (post = SET applied)."""
         entries = c["dirs_masked"]
         for e in entries:
-            if not self.backend.exists(self._path(e["dir"])):
-                raise ChangeFeedTruncatedError(
-                    f"change feed truncated: version {v}'s masked dir "
-                    f"{e['dir']!r} was vacuumed — re-baseline"
-                )
+            self._require_dir(v, e["dir"], "masked dir")
         prior = self._state_at(v - 1).get("masks") or []
         df = self._read_dir_entries_masked(
             spark, entries, table_schema, prior
@@ -3934,6 +3849,26 @@ class VersionedParquetTable(TableStore):
         return df.filter(
             F.coalesce(self._conjuncts_predicate(conj), F.lit(False))
         )
+
+    def _row_images(
+        self,
+        spark: SparkSession,
+        c: dict[str, Any],
+        v: int,
+        table_schema: T.StructType,
+    ) -> tuple[DataFrame, Optional[DataFrame]]:
+        """(pre-images, post-images) of one eager DML commit or lazy
+        mask commit; post is None for a delete. Any other rewrite
+        (overwrite, plain restore) is not representable and raises."""
+        if c["mode"] == "mask":
+            pre = self._mask_removed(spark, c, v, table_schema)
+            if not c.get("set_exprs"):
+                return pre, None
+            mask = {"predicate": c["predicate"], "set_exprs": c["set_exprs"]}
+            return pre, self._mask_apply(pre, mask, table_schema)
+        if c["mode"] == "restore" and c.get("dml_op"):
+            return self._dml_images(spark, c, v, table_schema)
+        raise _unrepresentable(v, c["mode"])
 
     def read_changes_cdf(
         self,
@@ -3972,113 +3907,40 @@ class VersionedParquetTable(TableStore):
         to_version = self.version() if to_version is None else to_version
         table_schema = self.schema(to_version)
         parts: list[DataFrame] = []
-        seen: set[int] = set()
 
         def tag(df: DataFrame, ct: str, v: int) -> DataFrame:
             return df.withColumn("_change_type", F.lit(ct)).withColumn(
                 "_commit_version", F.lit(v).cast("long")
             )
 
-        names = self._commit_names()
-        self._check_feed_contiguous(names, from_version, to_version)
-        for name in names:
-            v = int(name.split(".")[0])
-            if v <= from_version or v > to_version:
-                continue
-            seen.add(v)
-            c = json.loads(
-                self.backend.read_text(
-                    self.backend.join(self._commits_dir, name)
-                )
-            )
+        for v, c in self._feed_commits(from_version, to_version):
             mode = c["mode"]
             if mode == "append":
-                if not c.get("dir"):
-                    continue  # metadata-only commit (set_properties)
-                if not self.backend.exists(self._path(c["dir"])):
-                    raise ChangeFeedTruncatedError(
-                        f"change feed truncated: version {v}'s data dir "
-                        f"{c['dir']!r} was vacuumed — re-baseline"
-                    )
-                entry = {"dir": c["dir"], "schema": c["written_schema"]}
                 parts.append(
-                    tag(
-                        self._read_dir_entries(spark, [entry], table_schema),
-                        "insert",
-                        v,
-                    )
+                    tag(self._appended(spark, c, table_schema), "insert", v)
                 )
-                continue
-            if "compacted_from" in c:
-                continue  # rows-preserving OPTIMIZE: zero change rows
-            if "masks_folded" in c:
-                continue  # rows-preserving tombstone materialization
-            if "patches_folded" in c:
-                # pure fold_patches: rewrites the touched buckets to
-                # exactly their reconciled prior content — rows-preserving
-                # by construction, zero change rows (the patch commits
-                # themselves emitted the changes)
-                continue
-            if mode == "restore" and c.get("dml_op"):
-                pre, post = self._dml_images(spark, c, v, table_schema)
+            elif mode == "merge":
+                parts.append(self._merge_cdf(spark, c, v, table_schema))
+            elif mode == "patch":
+                parts.append(self._patch_cdf(spark, c, v, table_schema))
+            else:
+                pre, post = self._row_images(spark, c, v, table_schema)
                 if post is None:
                     parts.append(tag(pre, "delete", v))
-                    continue
-                parts.append(tag(pre, "update_preimage", v))
-                parts.append(tag(post, "update_postimage", v))
-                continue
-            if mode == "merge":
-                parts.append(self._merge_cdf(spark, c, v, table_schema))
-                continue
-            if mode == "patch":
-                parts.append(self._patch_cdf(spark, c, v, table_schema))
-                continue
-            if mode == "mask":
-                pre = self._mask_removed(spark, c, v, table_schema)
-                if c.get("set_exprs"):
-                    parts.append(tag(pre, "update_preimage", v))
-                    parts.append(
-                        tag(
-                            self._mask_apply(
-                                pre,
-                                {
-                                    "predicate": c["predicate"],
-                                    "set_exprs": c["set_exprs"],
-                                },
-                                table_schema,
-                            ),
-                            "update_postimage",
-                            v,
-                        )
-                    )
                 else:
-                    parts.append(tag(pre, "delete", v))
-                continue
-            raise ValueError(
-                f"version {v} is a {mode} commit — not representable as "
-                "a change feed; re-baseline from read(version=...)"
-            )
-        missing = sorted(set(range(from_version + 1, to_version + 1)) - seen)
-        if missing:
-            shown = missing[:5] if len(missing) <= 5 else missing[:5] + ["..."]
-            raise ChangeFeedTruncatedError(
-                f"change feed truncated: commits {shown} in "
-                f"({from_version}, {to_version}] were removed by log "
-                "truncation — re-baseline"
-            )
-        if not parts:
-            empty = T.StructType(
+                    parts.append(tag(pre, "update_preimage", v))
+                    parts.append(tag(post, "update_postimage", v))
+        return _union_all(
+            spark,
+            parts,
+            T.StructType(
                 list(table_schema.fields)
                 + [
                     T.StructField("_change_type", T.StringType()),
                     T.StructField("_commit_version", T.LongType()),
                 ]
-            )
-            return spark.createDataFrame([], empty)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            ),
+        )
 
     def _dml_images(
         self,
@@ -4097,11 +3959,7 @@ class VersionedParquetTable(TableStore):
         cur_names = {d["dir"] for d in c["dirs"]}
         replaced = [d for d in prev["dirs"] if d["dir"] not in cur_names]
         for d in replaced:
-            if not self.backend.exists(self._path(d["dir"])):
-                raise ChangeFeedTruncatedError(
-                    f"change feed truncated: version {v}'s pre-image "
-                    f"dir {d['dir']!r} was vacuumed — re-baseline"
-                )
+            self._require_dir(v, d["dir"], "pre-image dir")
         conj = [
             (cc, op, self._stat_deser(val))
             for cc, op, val in c["dml_predicate"]
@@ -4148,11 +4006,7 @@ class VersionedParquetTable(TableStore):
         rb = set(c.get("buckets_replaced") or [])
         replaced = [d for d in prev["dirs"] if d.get("bucket") in rb]
         for d in replaced:
-            if not self.backend.exists(self._path(d["dir"])):
-                raise ChangeFeedTruncatedError(
-                    f"change feed truncated: version {v}'s pre-image "
-                    f"bucket dir {d['dir']!r} was vacuumed — re-baseline"
-                )
+            self._require_dir(v, d["dir"], "pre-image bucket dir")
         br = prev.get("bucket_rows") or {}
         bids = {d.get("bucket") for d in replaced}
         old_rows = (
@@ -4183,33 +4037,15 @@ class VersionedParquetTable(TableStore):
         if prev is None:
             prev = self._state_at(v - 1)
         replaced, _old_rows = self._merge_preimage_entries(c, v, prev)
-        prior_masks = prev.get("masks") or []
         prior_patches = prev.get("patches") or []
         if not prior_patches:
-            if not replaced:
-                return spark.createDataFrame([], table_schema)
             return self._read_dir_entries_masked(
-                spark, replaced, table_schema, prior_masks
+                spark, replaced, table_schema, prev.get("masks") or []
             )
         for p in prior_patches:
-            if not self.backend.exists(self._path(p["dir"])):
-                raise ChangeFeedTruncatedError(
-                    f"change feed truncated: version {v}'s pre-image "
-                    f"patch dir {p['dir']!r} was vacuumed — re-baseline"
-                )
+            self._require_dir(v, p["dir"], "pre-image patch dir")
         rb = sorted(set(c.get("buckets_replaced") or []))
-        old = self.read(spark, version=v - 1, buckets=rb)
-        have = set(old.columns)
-        return old.select(
-            *[
-                (
-                    F.col(f.name).cast(_relax_nullability(f.dataType))
-                    if f.name in have
-                    else F.lit(None).cast(_relax_nullability(f.dataType))
-                ).alias(f.name)
-                for f in table_schema.fields
-            ]
-        )
+        return _conform(self.read(spark, version=v - 1, buckets=rb), table_schema)
 
     def _merge_cdf(
         self,
@@ -4220,88 +4056,23 @@ class VersionedParquetTable(TableStore):
     ) -> DataFrame:
         """Synthesize CDF rows for one MERGE commit (see
         :meth:`read_changes_cdf`). Reads ONLY the replaced buckets'
-        pre-image dirs and the commit's added dirs; a null-safe
-        full-outer join on the merge keys classifies every key, and an
-        exploded event array yields all change rows in a single pass:
-        new key -> insert, changed payload -> pre+post images, identical
-        payload (merge rewrote it byte-for-byte, or the row merely rode
-        along in a rewritten bucket) -> nothing. old-only keys cannot
-        occur under upsert semantics but would emit an exact delete.
+        pre-image dirs and the commit's added dirs, and classifies them
+        with :meth:`_classify_keyed`: new key -> insert, changed payload
+        -> pre+post images, identical payload (merge rewrote it
+        byte-for-byte, or the row merely rode along in a rewritten
+        bucket) -> nothing. old-only keys cannot occur under upsert
+        semantics but would emit an exact delete.
 
         NOTE the classification join costs O(touched-bucket rows) with a
         shuffle — consumers that only FOLD changes into sums/counts
         should use :meth:`read_changes_fold`, where unchanged rows
         cancel arithmetically and no join runs at all."""
-        keys = c["bucket_cols"]
-        non_keys = [f.name for f in table_schema.fields if f.name not in keys]
-        # keys-only tables have no payload: a constant stands in so
-        # matched keys always compare equal (a keys-only row cannot
-        # change) and only inserts survive
-        pay = F.struct(*non_keys) if non_keys else F.struct(F.lit(0))
-
-        def side(base: DataFrame) -> DataFrame:
-            return base.select(*keys, pay.alias("__p"))
-
-        o = side(
-            self._merge_preimage_frame(spark, c, v, table_schema)
-        ).alias("__o")
-        n = side(
-            self._read_dir_entries(
-                spark, list(c["dirs_added"]), table_schema
-            )
-            if c["dirs_added"]
-            else spark.createDataFrame([], table_schema)
-        ).alias("__n")
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & F.col(f"__o.{k}").eqNullSafe(F.col(f"__n.{k}"))
-        pre, post = F.col("__o.__p"), F.col("__n.__p")
-        ev = T.StructType(
-            [
-                T.StructField("ct", T.StringType()),
-                T.StructField("p", o.schema["__p"].dataType),
-            ]
-        )
-        events = (
-            F.when(
-                pre.isNull() & post.isNotNull(),
-                F.array(F.struct(F.lit("insert").alias("ct"), post.alias("p"))),
-            )
-            .when(
-                post.isNull() & pre.isNotNull(),
-                F.array(F.struct(F.lit("delete").alias("ct"), pre.alias("p"))),
-            )
-            .when(
-                ~pre.eqNullSafe(post),
-                F.array(
-                    F.struct(
-                        F.lit("update_preimage").alias("ct"), pre.alias("p")
-                    ),
-                    F.struct(
-                        F.lit("update_postimage").alias("ct"), post.alias("p")
-                    ),
-                ),
-            )
-            .otherwise(F.lit(None).cast(T.ArrayType(ev)))
-        )
-        joined = o.join(n, cond, "full_outer").select(
-            *[
-                F.coalesce(F.col(f"__o.{k}"), F.col(f"__n.{k}")).alias(k)
-                for k in keys
-            ],
-            F.explode(events).alias("__e"),  # null array -> row dropped
-        )
-        return joined.select(
-            *[
-                (
-                    F.col(f.name)
-                    if f.name in keys
-                    else F.col("__e.p")[f.name].alias(f.name)
-                )
-                for f in table_schema.fields
-            ],
-            F.col("__e.ct").alias("_change_type"),
-            F.lit(v).cast("long").alias("_commit_version"),
+        return self._classify_keyed(
+            self._merge_preimage_frame(spark, c, v, table_schema),
+            self._read_dir_entries(spark, c["dirs_added"] or [], table_schema),
+            c["bucket_cols"],
+            table_schema,
+            v,
         )
 
     def _patch_cdf(
@@ -4314,30 +4085,15 @@ class VersionedParquetTable(TableStore):
         """Synthesize CDF rows for one merge-on-read PATCH commit. The
         new side is the patch dir itself (delta-sized); the old side is
         the prior version's rows for the patch keys' buckets (patch-
-        aware, bucket-pruned read). The same null-safe full-outer
-        classification as :meth:`_merge_cdf`, with two patch-specific
-        outcomes: a tombstone row whose key existed emits an exact
-        ``delete`` (absent-key tombstones emit nothing), and old-side
-        rows NOT in the patch are ride-alongs that emit nothing."""
-        if not self.backend.exists(self._path(c["dir"])):
-            raise ChangeFeedTruncatedError(
-                f"change feed truncated: version {v}'s patch dir "
-                f"{c['dir']!r} was vacuumed — re-baseline"
-            )
+        aware, bucket-pruned read). Classified by
+        :meth:`_classify_keyed` with the patch's tombstone column."""
+        self._require_dir(v, c["dir"], "patch dir")
         prev = self._state_at(v - 1)
         keys = list(prev.get("bucket_cols") or [])
         written = T.StructType.fromJson(json.loads(c["written_schema"]))
-        raw = spark.read.schema(written).parquet(self._path(c["dir"]))
-        have = set(raw.columns)
-        pr = raw.select(
-            *[
-                (
-                    F.col(f.name).cast(_relax_nullability(f.dataType))
-                    if f.name in have
-                    else F.lit(None).cast(_relax_nullability(f.dataType))
-                ).alias(f.name)
-                for f in table_schema.fields
-            ],
+        pr = _conform(
+            spark.read.schema(written).parquet(self._path(c["dir"])),
+            table_schema,
             F.col(_PATCH_DEL_COL),
         )
         kt = self._bucket_key_schema(prev, keys)
@@ -4353,60 +4109,79 @@ class VersionedParquetTable(TableStore):
                 for r in pr.select(bexpr.alias("__b")).distinct().collect()
             )
         old = self.read(spark, version=v - 1, buckets=pb)
-        non_keys = [f.name for f in table_schema.fields if f.name not in keys]
-        pay = (
-            (lambda cols: F.struct(*cols))(non_keys)
-            if non_keys
-            else F.struct(F.lit(0))
+        return self._classify_keyed(
+            old, pr, keys, table_schema, v, tomb=_PATCH_DEL_COL
         )
+
+    @staticmethod
+    def _classify_keyed(
+        old: DataFrame,
+        new: DataFrame,
+        keys: list[str],
+        table_schema: T.StructType,
+        v: int,
+        tomb: Optional[str] = None,
+    ) -> DataFrame:
+        """CDF rows for commit ``v`` from a null-safe full-outer join of
+        the ``old`` and ``new`` rows on ``keys``: an exploded event array
+        yields every change row in one pass. A new-only key is an
+        insert, an old-only key a delete, a changed payload a pre+post
+        image pair, an identical payload nothing.
+
+        ``tomb`` names ``new``'s tombstone flag (a patch commit). Then a
+        tombstone on a present key is an exact delete, a tombstone on an
+        absent key is nothing, and old-only keys are ride-alongs from
+        the bucket-pruned prior read that emit nothing."""
+        non_keys = [f.name for f in table_schema.fields if f.name not in keys]
+        # keys-only tables have no payload: a constant stands in so
+        # matched keys always compare equal (a keys-only row cannot
+        # change) and only inserts survive
+        pay = F.struct(*non_keys) if non_keys else F.struct(F.lit(0))
         o = old.select(*keys, pay.alias("__p")).alias("__o")
-        n = pr.select(
-            *keys, pay.alias("__p"), F.col(_PATCH_DEL_COL).alias("__del")
+        n = new.select(
+            *keys,
+            pay.alias("__p"),
+            *([F.col(tomb).alias("__del")] if tomb else []),
         ).alias("__n")
         cond = F.lit(True)
         for k in keys:
             cond = cond & F.col(f"__o.{k}").eqNullSafe(F.col(f"__n.{k}"))
         pre, post = F.col("__o.__p"), F.col("__n.__p")
-        dele = F.col("__n.__del")
         ev = T.StructType(
             [
                 T.StructField("ct", T.StringType()),
                 T.StructField("p", o.schema["__p"].dataType),
             ]
         )
-        null_arr = F.lit(None).cast(T.ArrayType(ev))
-        events = (
-            F.when(
-                dele.isNull(), null_arr  # old-only ride-along: nothing
+        none = F.lit(None).cast(T.ArrayType(ev))
+
+        def emit(*events: tuple[str, Any]) -> Any:
+            return F.array(
+                *[F.struct(F.lit(ct).alias("ct"), p.alias("p")) for ct, p in events]
             )
-            .when(
-                dele & pre.isNotNull(),
-                F.array(F.struct(F.lit("delete").alias("ct"), pre.alias("p"))),
+
+        if tomb:
+            dele = F.col("__n.__del")
+            events = (
+                F.when(dele.isNull(), none)  # old-only ride-along
+                .when(dele & pre.isNotNull(), emit(("delete", pre)))
+                .when(dele, none)  # tombstone for an absent key
+                .when(pre.isNull(), emit(("insert", post)))
             )
-            .when(dele, null_arr)  # tombstone for an absent key
-            .when(
-                pre.isNull(),
-                F.array(F.struct(F.lit("insert").alias("ct"), post.alias("p"))),
-            )
-            .when(
-                ~pre.eqNullSafe(post),
-                F.array(
-                    F.struct(
-                        F.lit("update_preimage").alias("ct"), pre.alias("p")
-                    ),
-                    F.struct(
-                        F.lit("update_postimage").alias("ct"), post.alias("p")
-                    ),
-                ),
-            )
-            .otherwise(null_arr)
-        )
+        else:
+            events = F.when(
+                pre.isNull() & post.isNotNull(), emit(("insert", post))
+            ).when(post.isNull() & pre.isNotNull(), emit(("delete", pre)))
+        events = events.when(
+            ~pre.eqNullSafe(post),
+            emit(("update_preimage", pre), ("update_postimage", post)),
+        ).otherwise(none)
         joined = o.join(n, cond, "full_outer").select(
             *[
                 F.coalesce(F.col(f"__o.{k}"), F.col(f"__n.{k}")).alias(k)
                 for k in keys
             ],
-            F.explode(events).alias("__e"),
+            F.explode(events).alias("__e"),  # null array -> row dropped
         )
         return joined.select(
             *[
@@ -4459,80 +4234,12 @@ class VersionedParquetTable(TableStore):
         table_schema = self.schema(to_version)
         adds: list[DataFrame] = []
         subs: list[DataFrame] = []
-        seen: set[int] = set()
         fold_rows = 0
-        names = self._commit_names()
-        self._check_feed_contiguous(names, from_version, to_version)
-        for name in names:
-            v = int(name.split(".")[0])
-            if v <= from_version or v > to_version:
-                continue
-            seen.add(v)
-            c = json.loads(
-                self.backend.read_text(
-                    self.backend.join(self._commits_dir, name)
-                )
-            )
+        for v, c in self._feed_commits(from_version, to_version):
             mode = c["mode"]
             if mode == "append":
-                if not c.get("dir"):
-                    continue  # metadata-only commit
-                if not self.backend.exists(self._path(c["dir"])):
-                    raise ChangeFeedTruncatedError(
-                        f"change feed truncated: version {v}'s data dir "
-                        f"{c['dir']!r} was vacuumed — re-baseline"
-                    )
-                adds.append(
-                    self._read_dir_entries(
-                        spark,
-                        [{"dir": c["dir"], "schema": c["written_schema"]}],
-                        table_schema,
-                    )
-                )
-                continue
-            if "compacted_from" in c:
-                continue  # rows-preserving OPTIMIZE
-            if "masks_folded" in c:
-                continue  # rows-preserving tombstone materialization
-            if "patches_folded" in c:
-                # pure fold_patches: rewrites the touched buckets to
-                # exactly their reconciled prior content — rows-preserving
-                # by construction, zero change rows (the patch commits
-                # themselves emitted the changes)
-                continue
-            if mode == "restore" and c.get("dml_op"):
-                pre, post = self._dml_images(spark, c, v, table_schema)
-                subs.append(pre)
-                if post is not None:
-                    adds.append(post)
-                fold_rows += 2 * int(c.get("rows_changed") or 0)
-                continue
-            if mode == "mask":
-                # lazy delete: its killed rows are exactly the CDF
-                # deletes; lazy update additionally adds the SET-derived
-                # post-images (same pre/post shape as eager DML)
-                sub = self._mask_removed(spark, c, v, table_schema)
-                subs.append(sub)
-                if c.get("set_exprs"):
-                    adds.append(
-                        self._mask_apply(
-                            sub,
-                            {
-                                "predicate": c["predicate"],
-                                "set_exprs": c["set_exprs"],
-                            },
-                            table_schema,
-                        )
-                    )
-                # cost: the masked dirs are re-scanned (no recorded row
-                # counts for them; charge the bucket metadata when tagged)
-                br = self._state_at(v - 1).get("bucket_rows") or {}
-                fold_rows += sum(
-                    int(br.get(str(e.get("bucket")), 0))
-                    for e in c["dirs_masked"]
-                )
-                continue
-            if mode == "merge":
+                adds.append(self._appended(spark, c, table_schema))
+            elif mode == "merge":
                 prev = self._state_at(v - 1)
                 replaced, old_rows = self._merge_preimage_entries(
                     c, v, prev
@@ -4546,19 +4253,17 @@ class VersionedParquetTable(TableStore):
                             spark, c, v, table_schema, prev
                         )
                     )
-                new_entries = list(c.get("dirs_added") or [])
-                if new_entries:
+                if c.get("dirs_added"):
                     adds.append(
                         self._read_dir_entries(
-                            spark, new_entries, table_schema
+                            spark, c["dirs_added"], table_schema
                         )
                     )
                 new_rows = sum(
                     int(r) for r in (c.get("bucket_rows") or {}).values()
                 )
                 fold_rows += (old_rows or 0) + new_rows
-                continue
-            if mode == "patch":
+            elif mode == "patch":
                 # merge-on-read commit: the exact pre/post images come
                 # from the same classification _patch_cdf synthesizes
                 # (delta-sized patch vs bucket-pruned prior read) —
@@ -4592,19 +4297,24 @@ class VersionedParquetTable(TableStore):
                     ) + n
                 else:
                     fold_rows += 2 * n
-                continue
-            raise ValueError(
-                f"version {v} is a {mode} commit — not representable as "
-                "a change feed; re-baseline from read(version=...)"
-            )
-        missing = sorted(set(range(from_version + 1, to_version + 1)) - seen)
-        if missing:
-            shown = missing[:5] if len(missing) <= 5 else missing[:5] + ["..."]
-            raise ChangeFeedTruncatedError(
-                f"change feed truncated: commits {shown} in "
-                f"({from_version}, {to_version}] were removed by log "
-                "truncation — re-baseline"
-            )
+            else:
+                # eager DML and lazy masks: pre-images are subs, SET-
+                # derived post-images adds (same shape for both)
+                pre, post = self._row_images(spark, c, v, table_schema)
+                subs.append(pre)
+                if post is not None:
+                    adds.append(post)
+                if mode == "mask":
+                    # cost: the masked dirs are re-scanned (no recorded
+                    # row counts for them; charge the bucket metadata
+                    # when tagged)
+                    br = self._state_at(v - 1).get("bucket_rows") or {}
+                    fold_rows += sum(
+                        int(br.get(str(e.get("bucket")), 0))
+                        for e in c["dirs_masked"]
+                    )
+                else:
+                    fold_rows += 2 * int(c.get("rows_changed") or 0)
         st = self._state_at(to_version)
         dirs = st["dirs"]
         table_rows: Optional[int] = None
@@ -4616,18 +4326,9 @@ class VersionedParquetTable(TableStore):
             == {int(b) for b in st["bucket_rows"]}
         ):
             table_rows = int(sum(st["bucket_rows"].values()))
-
-        def union(parts: list[DataFrame]) -> DataFrame:
-            if not parts:
-                return spark.createDataFrame([], table_schema)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
         return (
-            union(adds),
-            union(subs),
+            _union_all(spark, adds, table_schema),
+            _union_all(spark, subs, table_schema),
             {"fold_rows": fold_rows, "table_rows": table_rows},
         )
 
@@ -5643,24 +5344,10 @@ class VersionedParquetTable(TableStore):
         from pyspark.sql import Observation
 
         target = T.StructType.fromJson(json.loads(st["schema"]))
-        relaxed = [
-            T.StructField(f.name, _relax_nullability(f.dataType), True)
-            for f in target.fields
-        ]
         parts = []
         if source is not None:
-            have = set(source.columns)
             parts.append(
-                source.select(
-                    *[
-                        (
-                            F.col(f.name).cast(f.dataType)
-                            if f.name in have
-                            else F.lit(None).cast(f.dataType)
-                        ).alias(f.name)
-                        for f in relaxed
-                    ]
-                ).withColumn(_PATCH_DEL_COL, F.lit(False))
+                _conform(source, target).withColumn(_PATCH_DEL_COL, F.lit(False))
             )
         if delete_keys is not None:
             tomb = delete_keys
@@ -5669,20 +5356,11 @@ class VersionedParquetTable(TableStore):
                     source.select(*key_cols), on=key_cols, how="left_anti"
                 )
             parts.append(
-                tomb.select(
-                    *[
-                        (
-                            F.col(f.name).cast(f.dataType)
-                            if f.name in key_cols
-                            else F.lit(None).cast(f.dataType)
-                        ).alias(f.name)
-                        for f in relaxed
-                    ]
-                ).withColumn(_PATCH_DEL_COL, F.lit(True))
+                _conform(tomb, target, have=key_cols).withColumn(
+                    _PATCH_DEL_COL, F.lit(True)
+                )
             )
-        pdf = parts[0]
-        for p in parts[1:]:
-            pdf = pdf.unionByName(p)
+        pdf = _union_all(spark, parts, target)
         new_version = st["version"] + 1
         dir_name = f"d{new_version:010d}-{uuid.uuid4().hex[:8]}"
         obs = Observation()

@@ -356,3 +356,104 @@ def test_cdf_merge_vacuumed_preimage_truncates(spark, tmp_path):
     t.vacuum(retain_versions=1)
     with pytest.raises(ChangeFeedTruncatedError):
         t.read_changes_cdf(spark, base).count()
+
+
+# ----------------------- one walker behind the three feeds -----------------
+
+
+def _signed(plus, minus):
+    """The multiset ``plus - minus`` of (k, v) rows, zero counts dropped."""
+    from collections import Counter
+
+    n = Counter(tuple(r) for df in plus for r in df.select("k", "v").collect())
+    n.subtract(tuple(r) for df in minus for r in df.select("k", "v").collect())
+    return {row: c for row, c in n.items() if c}
+
+
+def test_three_feeds_agree_on_every_commit_kind(spark, tmp_path, monkeypatch):
+    """One table carries a commit of every kind the feeds tell apart, and
+    read_changes, read_changes_cdf and read_changes_fold agree on it.
+    compact() refuses a bucketized table, so the compaction lands first
+    and the first merge then bucketizes the table in an overwrite, which
+    no feed represents; the identities are checked on either side of it.
+    A range with a log hole raises ChangeFeedTruncatedError from all
+    three feeds, whatever else the range holds."""
+    from odbc2deltalake_spark.tablestore import ChangeFeedTruncatedError
+
+    monkeypatch.setattr(VersionedParquetTable, "PATCH_MIN_TABLE_ROWS", 1)
+    t = VersionedParquetTable(tmp_path / "t")
+
+    def rows(ks, mul=10):
+        return spark.createDataFrame([(k, k * mul) for k in ks], "k long, v long")
+
+    t.write(rows(range(30)), mode="overwrite")  # v0
+    t.write(rows(range(30, 36)), mode="append")  # v1
+    t.set_properties({"owner": "feeds"})  # v2: metadata-only append
+    t.compact(spark, out_partitions=1)  # v3
+    t.merge_upsert(spark, rows([36, 37]), ["k"], num_buckets=4)  # v4
+    t.delete_where(spark, ("k", "=", 3))  # v5
+    t.update_where(spark, {"v": "v + 1"}, ("k", "<=", 1))  # v6
+    t.delete_where(spark, ("k", "=", 5), lazy=True)  # v7
+    t.update_where(spark, {"v": "v * 2"}, ("k", ">=", 34), lazy=True)  # v8
+    t.fold_masks(spark)  # v9
+    t.merge_upsert(spark, rows([2, 40, 41], mul=7), ["k"])  # v10
+    t.merge_upsert(  # v11: a tombstone on a present and an absent key
+        spark,
+        rows([4, 50], mul=3),
+        ["k"],
+        delete_keys=spark.createDataFrame([(6,), (99,)], "k long"),
+        strategy="auto",
+    )
+    t.fold_patches(spark)  # v12
+    t.write(rows(range(60, 63)), mode="append")  # v13
+    h = {c["version"]: c for c in t.history()}
+    assert [h[v]["mode"] for v in range(14)] == [
+        "overwrite", "append", "append", "overwrite", "overwrite",
+        "restore", "restore", "mask", "mask", "restore", "merge",
+        "patch", "merge", "append",
+    ]
+    assert h[2]["dir"] is None and "compacted_from" in h[3]
+    assert h[5]["dml_op"] == "delete" and h[6]["dml_op"] == "update"
+    assert "masks_folded" in h[9] and "patches_folded" in h[12]
+
+    # append-only sub-ranges: the append feed is the CDF's inserts
+    for lo, hi in [(0, 3), (12, 13)]:
+        plain = _rows(
+            t.read_changes(spark, lo, hi).select("k", "v", "_commit_version")
+        )
+        cdf = t.read_changes_cdf(spark, lo, hi)
+        assert plain and plain == _rows(
+            cdf.filter(F.col("_change_type") == "insert").select(
+                "k", "v", "_commit_version"
+            )
+        )
+        assert cdf.filter(F.col("_change_type") != "insert").count() == 0
+
+    # the fold's adds - subs is the CDF's net change, and both are the
+    # difference of the snapshots at the range's ends
+    for lo, hi in [(0, 3), (4, 13)]:
+        cdf = t.read_changes_cdf(spark, lo, hi)
+
+        def ct(*kinds):
+            return cdf.filter(F.col("_change_type").isin(*kinds))
+
+        adds, subs, _cost = t.read_changes_fold(spark, lo, hi)
+        net = _signed(
+            [ct("insert", "update_postimage")], [ct("delete", "update_preimage")]
+        )
+        assert net == _signed([adds], [subs])
+        assert net == _signed(
+            [t.read(spark, version=hi)], [t.read(spark, version=lo)]
+        )
+    # the unrepresentable bucketizing overwrite splits the two halves
+    with pytest.raises(ValueError, match="not representable"):
+        t.read_changes_cdf(spark, 3, 4)
+
+    # a log hole wins over every commit that follows it, the restore
+    # (and, for read_changes, the merge) included
+    t.restore(12)  # v14
+    t.checkpoint(8)
+    t.truncate_log(before_version=9)
+    for feed in (t.read_changes, t.read_changes_cdf, t.read_changes_fold):
+        with pytest.raises(ChangeFeedTruncatedError, match="re-baseline"):
+            feed(spark, 4)

@@ -322,3 +322,22 @@ def test_evicted_rows_are_only_previously_green_ones():
     }
     assert evicted_green(last, {"kept"}) == ["moved_out"]
     assert evicted_green(last, set(last)) == []
+
+
+def test_round_close_refuses_unknown_arguments(capsys):
+    """An unknown flag or --help stops round_close before step 1: the
+    ledger and the bench trend stay byte-identical."""
+    import pytest
+
+    from tools.round_close import main
+
+    files = [REPO / "docs/ROTATION_LEDGER.md", REPO / "docs/bench_trend.json"]
+    before = [f.read_bytes() for f in files]
+    with pytest.raises(SystemExit) as bogus:
+        main(["--bogus"])
+    assert bogus.value.code == 2
+    with pytest.raises(SystemExit) as helped:
+        main(["--help"])
+    assert helped.value.code == 0
+    assert "--sf01" in capsys.readouterr().out
+    assert [f.read_bytes() for f in files] == before

@@ -1,7 +1,7 @@
 """Round-close checklist executor (VERDICT r6 #1: the regen step must be
 part of the routine, not a memory).
 
-    python tools/round_close.py [--full]
+    python tools/round_close.py [--full] [--sf01]
 
 Steps, in order, fail-fast:
 
@@ -18,11 +18,17 @@ Steps, in order, fail-fast:
    (VERDICT r11 #7).
 3. Untracked round artifacts (CORRECTNESS/BENCH jsons) are listed as
    MUST-COMMIT.
-4. --full: also run the ledger test file and the overflow oracle gate.
+4. --sf01 (implied by --full): run the sf0.1 window sweep and the
+   sf0.01 verification of rows evicted from the driver window.
+5. --full: also run the ledger test file and the overflow oracle gate.
+
+Arguments are parsed before step 1: an unknown flag (or --help) exits
+without writing anything.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import re
 import subprocess
@@ -245,7 +251,22 @@ def per_query_verdicts(
     return out
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(
+        description="Run the round-close checklist (see the module docstring)."
+    )
+    ap.add_argument(
+        "--sf01",
+        action="store_true",
+        help="also run the sf0.1 window sweep and the evicted-row check",
+    )
+    ap.add_argument(
+        "--full",
+        action="store_true",
+        help="--sf01 plus the ledger tests and the overflow oracle gate",
+    )
+    args = ap.parse_args(argv)
+    run_sf01 = args.full or args.sf01
     rc = 0
     # 1. ledger regen
     before = (REPO / "docs/ROTATION_LEDGER.md").read_text()
@@ -465,7 +486,7 @@ def main() -> int:
             s.name for s in _reg2.ordered_specs()[: _reg2.DRIVER_WINDOW]
         }
         evicted = evicted_green(json.loads(corr[-1].read_text()), window_now)
-        if evicted and ("--full" in sys.argv or "--sf01" in sys.argv):
+        if evicted and run_sf01:
             r = subprocess.run(
                 [sys.executable, "tools/check_correctness.py",
                  "/root/testdata/sf0.01", *evicted,
@@ -500,7 +521,7 @@ def main() -> int:
     # recorded machine-readable. Run by --full (or --sf01 alone); plain
     # mode just audits the recorded artifact.
     sweep_path = REPO / "docs" / "sf01_window_sweep.json"
-    if "--full" in sys.argv or "--sf01" in sys.argv:
+    if run_sf01:
         r = subprocess.run(
             [sys.executable, "tools/check_correctness.py",
              "/root/testdata/sf0.1", "--window", "--flagships",
@@ -528,7 +549,7 @@ def main() -> int:
               "tools/round_close.py --sf01 before closing the round")
         rc = 1
 
-    if "--full" in sys.argv:
+    if args.full:
         r = subprocess.run(
             [sys.executable, "-m", "pytest", "tests/test_rotation_ledger.py",
              "tests/test_correctness_extras.py", "-q"],
