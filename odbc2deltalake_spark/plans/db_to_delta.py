@@ -927,54 +927,56 @@ def read_current_rows(
     delta_col: str,
     prune: bool = True,
 ) -> DataFrame:
-    """The HOT read path: current (non-deleted) rows as
-    ``latest_pk_version ⨝ history`` on (pks, delta_col) — J2 — with the
-    history scan pruned by commit-level delta-col stats.
+    """The HOT read path: current (non-deleted) rows as the history
+    rows that have an entry in ``latest_pk_version`` on (pks, delta_col)
+    — J2 — with the history scan pruned by commit-level delta-col stats.
 
     Why this beats the W1 full-history window at scale: the window must
-    shuffle EVERY history version ever written; this join touches only
-    commits that can still hold a current row. Every current row's
-    delta value is >= min(delta_col) over ``latest_pk_version`` (that's
-    what the index stores), so commits whose recorded delta-col max
-    lies below that scalar are provably fully superseded and are
-    dropped at the commit log before Spark plans the scan. On a churny
-    table the prune converges to "the last few loads" regardless of
-    history length; loads without recorded bounds (tombstone appends,
-    pre-r6 history) are conservatively kept. The min() probe itself
-    reads only the keys-only index — control-plane cost.
+    shuffle EVERY history version ever written; this read is one pass
+    over the commits that can still hold a current row, semi-joined with
+    the keys-only index (broadcast while it fits the session's broadcast
+    threshold), so no shuffle at all. Every current row's delta value is
+    >= min(delta_col) over ``latest_pk_version`` (that's what the index
+    stores), so commits whose recorded delta-col max lies below that
+    scalar are provably fully superseded and are dropped at the commit
+    log before Spark plans the scan. Loads without recorded bounds
+    (tombstone appends, pre-r6 history) are conservatively kept. The
+    min() probe is answered from the index's commit or footer metadata
+    where it can be (:meth:`TableStore.min_and_nulls`), with no job.
 
-    ``.distinct()`` mirrors the documented W2 verification semantics:
-    the rewind path can append byte-identical (pk, ts) versions twice
-    (see tests/cdc_utils.py:current_rows).
+    The semi join emits each history row at most once, whatever the
+    index holds, so nothing is deduplicated: a key has one current row
+    as long as each extraction delivers one row per primary key. The
+    rewind re-extraction re-appends a key's current version stamped
+    ``load_ts + 1µs``, so those copies differ in ``__timestamp`` and a
+    distinct would not merge them either (see
+    tests/cdc_utils.py:current_rows). A source that delivers the same
+    row twice in one extraction writes two history rows and two index
+    entries for it, and both rows come back.
     """
     dest = destination if isinstance(destination, DeltaDestination) else (
         DeltaDestination(destination)
     )
-    lpk = dest.latest_pk_version.read(spark)
+    lpk = dest.latest_pk_version
     skip = None
     if prune:
-        # one control-plane probe for BOTH the prune scalar and NULL
-        # presence: a nullable delta col (legacy temporal rows, a
-        # restore nulling the column) makes the residual `ts >= min`
-        # filter drop NULL-ts current rows, so pruning is disabled
-        # whenever the index holds any NULL — conservative and exact
-        probe = lpk.agg(
-            F.min(delta_col).alias("m"),
-            F.max(F.col(delta_col).isNull()).alias("has_null"),
-        ).first()
-        if probe["m"] is not None and not probe["has_null"]:
-            skip = (delta_col, ">=", probe["m"])
-    hist = dest.delta.read(spark, skip_where=skip).alias("h")
-    right = lpk.select(*pk_cols, delta_col).alias("l")
+        # a nullable delta col (legacy temporal rows, a restore nulling
+        # the column) makes the residual `ts >= min` filter drop NULL-ts
+        # current rows, so pruning is disabled whenever the index holds
+        # any NULL — conservative and exact
+        low, nulls = lpk.min_and_nulls(spark, delta_col)
+        if low is not None and not nulls:
+            skip = (delta_col, ">=", low)
+    hist = (
+        dest.delta.read(spark, skip_where=skip)
+        .filter(~F.col(SYS.is_deleted))
+        .alias("h")
+    )
+    index = lpk.read(spark).select(*pk_cols, delta_col).alias("l")
     # pks are non-null (plain =); the delta col joins NULL-SAFELY so a
     # current version whose delta value is NULL (nullable datetime delta
     # col) still matches its index entry — `=` would silently drop it
     cond = F.col(f"h.`{delta_col}`").eqNullSafe(F.col(f"l.`{delta_col}`"))
     for c in pk_cols:
         cond = cond & (F.col(f"h.`{c}`") == F.col(f"l.`{c}`"))
-    return (
-        hist.join(right, on=cond, how="inner")
-        .select("h.*")
-        .filter(~F.col(SYS.is_deleted))
-        .distinct()
-    )
+    return hist.join(index, on=cond, how="left_semi")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from odbc2deltalake_spark.metadata import ColInfo
-from odbc2deltalake_spark.parquet_footers import footer_max_and_count
+from odbc2deltalake_spark.parquet_footers import footer_col_stats
 from odbc2deltalake_spark.sources.base import Source
 
 
@@ -92,8 +92,10 @@ class ParquetTableSource(Source):
         integer with min/max statistics in every row group (an all-NULL
         row group has none)."""
         got = (
-            footer_max_and_count([self.path], delta_col)
+            footer_col_stats([self.path], delta_col)
             if Path(self.path).is_file()
             else None
         )
-        return got if got is not None else super().max_and_count(spark, delta_col)
+        if got is None:
+            return super().max_and_count(spark, delta_col)
+        return got.max, got.rows

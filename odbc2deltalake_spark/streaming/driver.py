@@ -39,6 +39,12 @@ def foreach_batch_scd2(
     """Build a ``foreachBatch`` function that applies each micro-batch as
     one incremental SCD2 load.
 
+    Each micro-batch must hold one row per primary key, as every
+    extraction must: the sink does not deduplicate. A batch that repeats
+    a row appends it to the history twice and gives the key two
+    ``latest_pk_version`` entries, and ``read_current_rows`` then returns
+    both copies.
+
     Usage::
 
         q = (stream_df.writeStream

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from odbc2deltalake_spark.parquet_footers import footer_max_and_count
+from odbc2deltalake_spark.parquet_footers import ColStats, footer_col_stats
 
 
 class TableNotFoundError(Exception):
@@ -619,7 +619,8 @@ class TableStore(ABC):
             known_stats=known_stats,
             observed=(obs, cols),
         )
-        return (v, *_observed_count_minmax(obs, cols))
+        n, mm, _ = _observed_count_minmax(obs, cols)
+        return v, n, mm
 
     def count_rows(self, spark: SparkSession) -> int:
         """Current row count. Stores that track counts in commit metadata
@@ -638,12 +639,23 @@ class TableStore(ABC):
         ).first()
         return row["m"], row["c"]
 
+    def min_and_nulls(self, spark: SparkSession, col: str) -> tuple[Any, int]:
+        """(MIN(col), rows whose ``col`` IS NULL) of the current snapshot
+        — the prune probe of the current-rows read. Stores that record
+        bounds and null counts in metadata override this to answer
+        without a scan."""
+        row = self.read(spark).agg(
+            F.min(col).alias("m"),
+            (F.count(F.lit(1)) - F.count(col)).alias("n"),
+        ).first()
+        return row["m"], int(row["n"])
+
 
 def _observe_count_minmax(
     df: DataFrame, cols: list[str]
 ) -> tuple[DataFrame, Any]:
     """``df`` with one Observation counting its rows and taking min/max
-    of ``cols`` as they stream through the write."""
+    and the non-NULL count of ``cols`` as they stream through the write."""
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -651,16 +663,21 @@ def _observe_count_minmax(
     for c in cols:
         aggs.append(F.min(c).alias(f"__mn_{c}"))
         aggs.append(F.max(c).alias(f"__mx_{c}"))
+        aggs.append(F.count(c).alias(f"__nn_{c}"))
     return df.observe(obs, *aggs), obs
 
 
 def _observed_count_minmax(
     obs: Any, cols: list[str]
-) -> tuple[int, dict[str, tuple[Any, Any]]]:
+) -> tuple[int, dict[str, tuple[Any, Any]], dict[str, int]]:
+    """(rows, {col: (min, max)}, {col: NULL count}) from the
+    Observation :func:`_observe_count_minmax` attached."""
     vals = obs.get
+    rows = int(vals["rows"])
     return (
-        int(vals["rows"]),
+        rows,
         {c: (vals[f"__mn_{c}"], vals[f"__mx_{c}"]) for c in cols},
+        {c: rows - int(vals[f"__nn_{c}"]) for c in cols},
     )
 
 
@@ -1306,6 +1323,10 @@ class VersionedParquetTable(TableStore):
             mrv = max(mrv, cm)
             last = v
             mode = c["mode"]
+            if mode in ("overwrite", "restore"):
+                # both replace the whole state, bucket layout included:
+                # the commit's own fields below set it again
+                num_buckets = bucket_cols = bucket_key_types = None
             if mode == "overwrite":
                 live = []
                 patches = []
@@ -1362,6 +1383,8 @@ class VersionedParquetTable(TableStore):
                 if c.get("rows") is not None:
                     entry["rows"] = c["rows"]
                     entry["minmax"] = c.get("minmax") or {}
+                    if "nulls" in c:
+                        entry["nulls"] = c["nulls"]
                 live.append(entry)
             if c.get("schema"):
                 schema_json = c["schema"]
@@ -1527,7 +1550,16 @@ class VersionedParquetTable(TableStore):
             if version is not None:
                 raise ValueError("pass version OR timestamp, not both")
             version = self.version_at_timestamp(timestamp)
-        st = self._state_at(version)
+        return self._read_state(spark, self._state_at(version), buckets, skip_where)
+
+    def _read_state(
+        self,
+        spark: SparkSession,
+        st: dict[str, Any],
+        buckets: Optional[Iterable[int]] = None,
+        skip_where: Optional[tuple[str, str, Any] | list[tuple[str, str, Any]]] = None,
+    ) -> DataFrame:
+        """:meth:`read` of an already-resolved state ``st``."""
         target = T.StructType.fromJson(json.loads(st["schema"]))
         dirs = st["dirs"]
         if buckets is not None:
@@ -2258,6 +2290,7 @@ class VersionedParquetTable(TableStore):
                 c: [self._stat_ser(mn), self._stat_ser(mx)]
                 for c, (mn, mx) in counted[1].items()
             }
+            commit["nulls"] = counted[2]
         if stats_cols and per_file_stats:
             commit["stats"] = self._footer_file_stats(
                 self._path(dir_name), stats_cols
@@ -3829,17 +3862,19 @@ class VersionedParquetTable(TableStore):
         c: dict[str, Any],
         v: int,
         table_schema: T.StructType,
+        prev: dict[str, Any],
     ) -> DataFrame:
         """The rows one mask commit AFFECTED (pre-images): predicate
         matches inside its masked dirs, as seen AFTER every earlier mask
         on the same dirs (a re-masked dir must not re-emit rows an older
         tombstone killed, and must see an older update's transforms).
         For tombstone masks these are the deletes; for update masks the
-        update_preimages (post = SET applied)."""
+        update_preimages (post = SET applied). ``prev`` is the state at
+        ``v - 1``."""
         entries = c["dirs_masked"]
         for e in entries:
             self._require_dir(v, e["dir"], "masked dir")
-        prior = self._state_at(v - 1).get("masks") or []
+        prior = prev.get("masks") or []
         df = self._read_dir_entries_masked(
             spark, entries, table_schema, prior
         )
@@ -3856,19 +3891,29 @@ class VersionedParquetTable(TableStore):
         c: dict[str, Any],
         v: int,
         table_schema: T.StructType,
+        prev: dict[str, Any],
     ) -> tuple[DataFrame, Optional[DataFrame]]:
         """(pre-images, post-images) of one eager DML commit or lazy
-        mask commit; post is None for a delete. Any other rewrite
-        (overwrite, plain restore) is not representable and raises."""
+        mask commit, given ``prev``, the state at ``v - 1``; post is None
+        for a delete."""
         if c["mode"] == "mask":
-            pre = self._mask_removed(spark, c, v, table_schema)
+            pre = self._mask_removed(spark, c, v, table_schema, prev)
             if not c.get("set_exprs"):
                 return pre, None
             mask = {"predicate": c["predicate"], "set_exprs": c["set_exprs"]}
             return pre, self._mask_apply(pre, mask, table_schema)
-        if c["mode"] == "restore" and c.get("dml_op"):
-            return self._dml_images(spark, c, v, table_schema)
-        raise _unrepresentable(v, c["mode"])
+        return self._dml_images(spark, c, v, table_schema, prev)
+
+    def _prior_state(self, v: int, c: dict[str, Any]) -> dict[str, Any]:
+        """The state at ``v - 1`` that commit ``v``'s change rows are
+        derived from, resolved once per feed commit. Any rewrite but a
+        merge, patch, mask or DML commit (an overwrite, a plain restore)
+        is not representable and raises before the replay."""
+        if c["mode"] not in ("merge", "patch", "mask") and not (
+            c["mode"] == "restore" and c.get("dml_op")
+        ):
+            raise _unrepresentable(v, c["mode"])
+        return self._state_at(v - 1)
 
     def read_changes_cdf(
         self,
@@ -3919,12 +3964,14 @@ class VersionedParquetTable(TableStore):
                 parts.append(
                     tag(self._appended(spark, c, table_schema), "insert", v)
                 )
-            elif mode == "merge":
-                parts.append(self._merge_cdf(spark, c, v, table_schema))
+                continue
+            prev = self._prior_state(v, c)
+            if mode == "merge":
+                parts.append(self._merge_cdf(spark, c, v, table_schema, prev))
             elif mode == "patch":
-                parts.append(self._patch_cdf(spark, c, v, table_schema))
+                parts.append(self._patch_cdf(spark, c, v, table_schema, prev))
             else:
-                pre, post = self._row_images(spark, c, v, table_schema)
+                pre, post = self._row_images(spark, c, v, table_schema, prev)
                 if post is None:
                     parts.append(tag(pre, "delete", v))
                 else:
@@ -3948,14 +3995,15 @@ class VersionedParquetTable(TableStore):
         c: dict[str, Any],
         v: int,
         table_schema: T.StructType,
+        prev: dict[str, Any],
     ) -> tuple[DataFrame, Optional[DataFrame]]:
         """(pre-image, post-image) rows of one DML commit, synthesized
         from metadata: the replaced dirs are the prior version's dirs
         missing from the commit's dir list, the recorded predicate
         selects the changed rows, and for updates the recorded SET text
         re-derives the post-images. Post is None for a delete; an
-        update whose SET was passed as Column objects raises."""
-        prev = self._state_at(v - 1)
+        update whose SET was passed as Column objects raises. ``prev`` is
+        the state at ``v - 1``."""
         cur_names = {d["dir"] for d in c["dirs"]}
         replaced = [d for d in prev["dirs"] if d["dir"] not in cur_names]
         for d in replaced:
@@ -3993,16 +4041,12 @@ class VersionedParquetTable(TableStore):
         self,
         c: dict[str, Any],
         v: int,
-        prev: Optional[dict[str, Any]] = None,
+        prev: dict[str, Any],
     ) -> tuple[list[dict[str, Any]], Optional[int]]:
-        """The prior version's dir entries for the buckets a merge
-        commit replaced, plus their metadata row count (None when any
-        replaced bucket lacks a recorded count). Raises
-        ChangeFeedTruncatedError when a pre-image dir was vacuumed.
-        ``prev`` passes an already-resolved v-1 state (one log replay
-        per feed commit, not three)."""
-        if prev is None:
-            prev = self._state_at(v - 1)
+        """The dir entries of ``prev`` (the state at ``v - 1``) for the
+        buckets a merge commit replaced, plus their metadata row count
+        (None when any replaced bucket lacks a recorded count). Raises
+        ChangeFeedTruncatedError when a pre-image dir was vacuumed."""
         rb = set(c.get("buckets_replaced") or [])
         replaced = [d for d in prev["dirs"] if d.get("bucket") in rb]
         for d in replaced:
@@ -4022,7 +4066,7 @@ class VersionedParquetTable(TableStore):
         c: dict[str, Any],
         v: int,
         table_schema: T.StructType,
-        prev: Optional[dict[str, Any]] = None,
+        prev: dict[str, Any],
     ) -> DataFrame:
         """The RECONCILED prior-state rows of the buckets a merge commit
         replaced, cast to ``table_schema`` — the pre-image side for CDF
@@ -4033,9 +4077,8 @@ class VersionedParquetTable(TableStore):
         emitted those changes; reading the raw base dirs here would emit
         them a second time). The no-patch fast path reads only the
         replaced dirs; with patches outstanding the bucket-pruned
-        time-travel read reconciles exactly like :meth:`_patch_cdf`."""
-        if prev is None:
-            prev = self._state_at(v - 1)
+        time-travel read reconciles exactly like :meth:`_patch_cdf`.
+        ``prev`` is the state at ``v - 1``."""
         replaced, _old_rows = self._merge_preimage_entries(c, v, prev)
         prior_patches = prev.get("patches") or []
         if not prior_patches:
@@ -4045,7 +4088,7 @@ class VersionedParquetTable(TableStore):
         for p in prior_patches:
             self._require_dir(v, p["dir"], "pre-image patch dir")
         rb = sorted(set(c.get("buckets_replaced") or []))
-        return _conform(self.read(spark, version=v - 1, buckets=rb), table_schema)
+        return _conform(self._read_state(spark, prev, rb), table_schema)
 
     def _merge_cdf(
         self,
@@ -4053,6 +4096,7 @@ class VersionedParquetTable(TableStore):
         c: dict[str, Any],
         v: int,
         table_schema: T.StructType,
+        prev: dict[str, Any],
     ) -> DataFrame:
         """Synthesize CDF rows for one MERGE commit (see
         :meth:`read_changes_cdf`). Reads ONLY the replaced buckets'
@@ -4068,7 +4112,7 @@ class VersionedParquetTable(TableStore):
         should use :meth:`read_changes_fold`, where unchanged rows
         cancel arithmetically and no join runs at all."""
         return self._classify_keyed(
-            self._merge_preimage_frame(spark, c, v, table_schema),
+            self._merge_preimage_frame(spark, c, v, table_schema, prev),
             self._read_dir_entries(spark, c["dirs_added"] or [], table_schema),
             c["bucket_cols"],
             table_schema,
@@ -4081,14 +4125,15 @@ class VersionedParquetTable(TableStore):
         c: dict[str, Any],
         v: int,
         table_schema: T.StructType,
+        prev: dict[str, Any],
     ) -> DataFrame:
         """Synthesize CDF rows for one merge-on-read PATCH commit. The
         new side is the patch dir itself (delta-sized); the old side is
         the prior version's rows for the patch keys' buckets (patch-
         aware, bucket-pruned read). Classified by
-        :meth:`_classify_keyed` with the patch's tombstone column."""
+        :meth:`_classify_keyed` with the patch's tombstone column.
+        ``prev`` is the state at ``v - 1``."""
         self._require_dir(v, c["dir"], "patch dir")
-        prev = self._state_at(v - 1)
         keys = list(prev.get("bucket_cols") or [])
         written = T.StructType.fromJson(json.loads(c["written_schema"]))
         pr = _conform(
@@ -4108,7 +4153,7 @@ class VersionedParquetTable(TableStore):
                 r[0]
                 for r in pr.select(bexpr.alias("__b")).distinct().collect()
             )
-        old = self.read(spark, version=v - 1, buckets=pb)
+        old = self._read_state(spark, prev, pb)
         return self._classify_keyed(
             old, pr, keys, table_schema, v, tomb=_PATCH_DEL_COL
         )
@@ -4239,8 +4284,9 @@ class VersionedParquetTable(TableStore):
             mode = c["mode"]
             if mode == "append":
                 adds.append(self._appended(spark, c, table_schema))
-            elif mode == "merge":
-                prev = self._state_at(v - 1)
+                continue
+            prev = self._prior_state(v, c)
+            if mode == "merge":
                 replaced, old_rows = self._merge_preimage_entries(
                     c, v, prev
                 )
@@ -4269,7 +4315,7 @@ class VersionedParquetTable(TableStore):
                 # (delta-sized patch vs bucket-pruned prior read) —
                 # unlike a merge there are no ride-along rows to cancel,
                 # so the fold is already minimal
-                ch = self._patch_cdf(spark, c, v, table_schema)
+                ch = self._patch_cdf(spark, c, v, table_schema, prev)
                 aux = ["_change_type", "_commit_version"]
                 subs.append(
                     ch.filter(
@@ -4288,7 +4334,6 @@ class VersionedParquetTable(TableStore):
                 n = int(c.get("patch_rows") or 0)
                 # classification scans the prior touched buckets: bound
                 # by one bucket per patch key (metadata-only estimate)
-                prev = self._state_at(v - 1)
                 meta = prev.get("bucket_rows") or {}
                 if meta and prev.get("num_buckets"):
                     avg = sum(int(r) for r in meta.values()) / len(meta)
@@ -4300,7 +4345,7 @@ class VersionedParquetTable(TableStore):
             else:
                 # eager DML and lazy masks: pre-images are subs, SET-
                 # derived post-images adds (same shape for both)
-                pre, post = self._row_images(spark, c, v, table_schema)
+                pre, post = self._row_images(spark, c, v, table_schema, prev)
                 subs.append(pre)
                 if post is not None:
                     adds.append(post)
@@ -4308,7 +4353,7 @@ class VersionedParquetTable(TableStore):
                     # cost: the masked dirs are re-scanned (no recorded
                     # row counts for them; charge the bucket metadata
                     # when tagged)
-                    br = self._state_at(v - 1).get("bucket_rows") or {}
+                    br = prev.get("bucket_rows") or {}
                     fold_rows += sum(
                         int(br.get(str(e.get("bucket")), 0))
                         for e in c["dirs_masked"]
@@ -4819,51 +4864,69 @@ class VersionedParquetTable(TableStore):
                 ).count()
         return self.read(spark).count()
 
-    def max_and_count(
-        self, spark: SparkSession, col: Optional[str]
-    ) -> tuple[Any, int]:
-        """(MAX(col), COUNT(*)) of the current snapshot with zero jobs
+    def _metadata_stats(self, col: Optional[str]) -> Optional[ColStats]:
+        """:class:`ColStats` of the current snapshot with zero jobs
         where metadata can answer it, for an integral ``col`` (other
         types' bounds round-trip through the commit JSON or the footer
         and need not compare equal to a scan's):
 
         1. from the commit log, when every live dir carries the
-           ``rows``/``minmax`` a counted write recorded. Dirs are
+           ``rows``/``minmax`` a counted write recorded (``nulls`` is
+           None unless every dir also carries the NULL count). Dirs are
            immutable and every rewrite (merge, fold, DML, compaction)
            records fresh entries without the fields, so the numbers can
            never go stale;
-        2. else from the live dirs' parquet footers (row counts and the
-           largest row-group max), on a local backend when every dir's
-           written schema carries ``col``.
+        2. else from the live dirs' parquet footers (row counts, the
+           row-group bounds and null counts), on a local backend when
+           every dir's written schema carries ``col``.
 
-        Patches and masks change rows without a new dir, so they fall
-        back to the scan, as does anything else neither source can
-        answer (see :func:`footer_max_and_count`)."""
+        Patches and masks change rows without a new dir, so they answer
+        None, as does anything else neither source can answer (see
+        :func:`footer_col_stats`); the caller then scans."""
         st = self._state_at()
         dirs = st["dirs"]
         schema = T.StructType.fromJson(json.loads(st["schema"]))
-        if (
-            not st["patches"]
-            and not st["masks"]
-            and (
-                col is None
-                or (
-                    col in schema.fieldNames()
-                    and isinstance(schema[col].dataType, T.IntegralType)
-                )
+        if st["patches"] or st["masks"] or not (
+            col is None
+            or (
+                col in schema.fieldNames()
+                and isinstance(schema[col].dataType, T.IntegralType)
             )
         ):
-            if all(
-                "rows" in d and (col is None or col in d["minmax"]) for d in dirs
-            ):
-                tops = [d["minmax"][col][1] for d in dirs] if col else []
-                tops = [t for t in tops if t is not None]
-                return (max(tops) if tops else None), sum(d["rows"] for d in dirs)
-            files = self._live_data_files(dirs, col)
-            got = footer_max_and_count(files, col) if files is not None else None
-            if got is not None:
-                return got
-        return super().max_and_count(spark, col)
+            return None
+        if all("rows" in d and (col is None or col in d["minmax"]) for d in dirs):
+            bounds = [d["minmax"][col] for d in dirs] if col else []
+            nulls = [(d.get("nulls") or {}).get(col) for d in dirs] if col else [None]
+            return ColStats(
+                min((lo for lo, _ in bounds if lo is not None), default=None),
+                max((hi for _, hi in bounds if hi is not None), default=None),
+                sum(d["rows"] for d in dirs),
+                None if None in nulls else sum(nulls),
+            )
+        files = self._live_data_files(dirs, col)
+        return footer_col_stats(files, col) if files is not None else None
+
+    def max_and_count(
+        self, spark: SparkSession, col: Optional[str]
+    ) -> tuple[Any, int]:
+        """(MAX(col), COUNT(*)) of the current snapshot, from
+        :meth:`_metadata_stats` with zero jobs where it answers, else
+        from a scan."""
+        got = self._metadata_stats(col)
+        if got is None:
+            return super().max_and_count(spark, col)
+        return got.max, got.rows
+
+    def min_and_nulls(self, spark: SparkSession, col: str) -> tuple[Any, int]:
+        """(MIN(col), NULL count of col) of the current snapshot, from
+        :meth:`_metadata_stats` with zero jobs where it answers both,
+        else from a scan: a counted write before the NULL count was
+        recorded, a patch, a mask, a non-integral column or a non-local
+        backend all scan."""
+        got = self._metadata_stats(col)
+        if got is None or got.nulls is None:
+            return super().min_and_nulls(spark, col)
+        return got.min, got.nulls
 
     def _live_data_files(
         self, dirs: list[dict[str, Any]], col: Optional[str]

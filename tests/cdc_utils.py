@@ -84,7 +84,12 @@ def current_rows(spark, dest):
     pruning — the engine's J2 hot path (plans/db_to_delta.py:
     read_current_rows; reference read-side verification pattern
     reference:tests/test_03_delta.py:132-138). Every lifecycle test
-    going through here also exercises the pruned read's exactness."""
+    going through here also exercises the pruned read's exactness.
+
+    The ``.distinct()`` is for the rewind re-extraction: it appends a
+    second history row for a key's current (pk, delta) version, stamped
+    one microsecond later in ``__timestamp``. The read returns both
+    rows; this projection, without ``__timestamp``, makes them equal."""
     from odbc2deltalake_spark.plans.db_to_delta import read_current_rows
 
     cur = read_current_rows(spark, dest, ["User_-_iD"], "time_stamp")

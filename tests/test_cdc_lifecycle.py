@@ -821,9 +821,10 @@ def _temporal_current(spark, dest):
     from odbc2deltalake_spark.plans.db_to_delta import read_current_rows
 
     cur = read_current_rows(spark, dest, ["id"], "SysStartTime")
-    # distinct: a rewind re-extraction legitimately appends history rows
-    # identical in (pk, ROW START) to ones already present — same as
-    # cdc_utils.current_rows
+    # distinct: a rewind re-extraction appends a second history row for
+    # a current (pk, ROW START) version, stamped one microsecond later in
+    # __timestamp; the read returns both, and this projection makes them
+    # equal — same as cdc_utils.current_rows
     return sorted(
         (r["id"], r["name"])
         for r in cur.select("id", "name").distinct().collect()

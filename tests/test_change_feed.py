@@ -457,3 +457,44 @@ def test_three_feeds_agree_on_every_commit_kind(spark, tmp_path, monkeypatch):
     for feed in (t.read_changes, t.read_changes_cdf, t.read_changes_fold):
         with pytest.raises(ChangeFeedTruncatedError, match="re-baseline"):
             feed(spark, 4)
+
+
+def test_feeds_resolve_each_prior_state_once(spark, tmp_path, monkeypatch):
+    """read_changes_cdf and read_changes_fold replay the log to the state
+    before each merge, patch, mask and DML commit once per feed call, and
+    not at all for an append."""
+    from collections import Counter
+
+    monkeypatch.setattr(VersionedParquetTable, "PATCH_MIN_TABLE_ROWS", 1)
+    t = VersionedParquetTable(tmp_path / "t")
+
+    def rows(ks, mul=10):
+        return spark.createDataFrame([(k, k * mul) for k in ks], "k long, v long")
+
+    t.write(rows(range(20)), mode="overwrite")  # v0
+    t.merge_upsert(spark, rows([20]), ["k"], num_buckets=4)  # v1: bucketizes
+    t.merge_upsert(spark, rows([2, 21], mul=7), ["k"])  # v2: merge
+    t.merge_upsert(spark, rows([4], mul=3), ["k"], strategy="auto")  # v3: patch
+    t.fold_patches(spark)  # v4
+    t.delete_where(spark, ("k", "=", 3))  # v5: DML delete
+    t.update_where(spark, {"v": "v + 1"}, ("k", "<=", 1))  # v6: DML update
+    t.delete_where(spark, ("k", "=", 5), lazy=True)  # v7: mask
+    t.write(rows([30]), mode="append")  # v8
+    modes = {c["version"]: c["mode"] for c in t.history()}
+    assert [modes[v] for v in range(2, 9)] == [
+        "merge", "patch", "merge", "restore", "restore", "mask", "append",
+    ]
+    calls: Counter = Counter()
+    real = VersionedParquetTable._state_at
+
+    def counting(self, version=None, use_checkpoint=True):
+        calls[version] += 1
+        return real(self, version, use_checkpoint)
+
+    monkeypatch.setattr(VersionedParquetTable, "_state_at", counting)
+    # v4 folds patches (rows-preserving, skipped); v8 is an append
+    want = {v - 1: 1 for v in (2, 3, 5, 6, 7)}
+    for feed in (t.read_changes_cdf, t.read_changes_fold):
+        calls.clear()
+        feed(spark, 1, 8)
+        assert {v: n for v, n in calls.items() if v is not None and v < 8} == want

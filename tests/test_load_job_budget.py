@@ -8,10 +8,16 @@ new key index from one key diff (one shuffle). Jobs are counted from the
 DAG scheduler's job-id counter (as ``perfbench`` does), so jobs the
 engine starts from pool threads are counted too.
 
+The current-rows read is budgeted too: its prune probe answers from
+index metadata with no job, and the read is one pass whose only exchange
+is the index broadcast.
+
 The equivalence tests at the end run the same load sequences through a
 copy of the earlier three-cascade algorithm (an ``exceptAll`` probe,
 ``latest_pk_union`` + ``deletes_keys`` for the deletes, and a second
-``latest_pk_union`` for the index) and require equal tables.
+``latest_pk_union`` for the index) and require equal tables, and compare
+the current-rows read with a copy of the earlier probe + inner join +
+``distinct`` read.
 """
 
 from __future__ import annotations
@@ -249,6 +255,135 @@ def test_stream_batch_merges_the_key_index_once(spark, tmp_path, monkeypatch):
     assert (lpk.version(), hist.version()) == (v0 + 1, h0 + 1)
     assert jobs <= STREAM_REDELIVERY_BUDGET, jobs
     assert _current(spark, dest) == want
+
+
+# ---------------------------------------------------- current-rows read --
+
+READ_BUDGET = 3
+
+
+def _read_probe_route(spark, dest, monkeypatch):
+    """The current-rows read's prune probe on ``dest``'s index, checked
+    equal to the scan: the route that answered it ("metadata", "footer"
+    or "scan") and the jobs it ran."""
+    import odbc2deltalake_spark.tablestore as ts
+
+    lpk = DeltaDestination(dest).latest_pk_version
+    routes = []
+    scan, footers = ts.TableStore.min_and_nulls, ts.footer_col_stats
+
+    def scan_spy(self, spark, col):
+        routes.append("scan")
+        return scan(self, spark, col)
+
+    def footer_spy(files, col):
+        got = footers(files, col)
+        if got is not None and got.nulls is not None:
+            routes.append("footer")
+        return got
+
+    with monkeypatch.context() as m:
+        m.setattr(ts.TableStore, "min_and_nulls", scan_spy)
+        m.setattr(ts, "footer_col_stats", footer_spy)
+        j0 = _jobs(spark)
+        got = lpk.min_and_nulls(spark, "rv")
+        jobs = _jobs(spark) - j0
+    assert got == scan(lpk, spark, "rv")
+    return (routes or ["metadata"])[-1], jobs
+
+
+def _assert_one_pass_read(spark, dest, want):
+    """A warm read of ``dest``'s current rows counts them in at most
+    READ_BUDGET jobs, and plans no exchange but the index broadcast."""
+    assert _current(spark, dest) == want  # warm
+    rows = read_current_rows(spark, dest, ["id"], "rv")
+    plan = rows._jdf.queryExecution().executedPlan().toString()
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1 and "BroadcastExchange" in exchanges[0], plan
+    j0 = _jobs(spark)
+    assert rows.count() == len(want)
+    jobs = _jobs(spark) - j0
+    assert jobs <= READ_BUDGET, jobs
+
+
+def test_warm_read_is_one_pass_on_a_counted_index(spark, tmp_path, loaded, monkeypatch):
+    """After a delta load, whose counted overwrite records the index's
+    bounds and NULL count, the read's probe answers from the commit."""
+    table, dest = loaded
+    table.change(update=[1, 2], insert=[302], delete=[10])
+    _load(spark, table.write(str(tmp_path / "s2.parquet")), dest)
+    assert _read_probe_route(spark, dest, monkeypatch) == ("metadata", 0)
+    want = sorted((i, v, rv) for i, (v, rv) in table.rows.items())
+    _assert_one_pass_read(spark, dest, want)
+
+
+def test_warm_read_is_one_pass_on_a_bucketized_index(spark, tmp_path, monkeypatch):
+    """After micro-batches, whose merges bucketize the index and record
+    no counts, the read's probe answers from the footers."""
+    from odbc2deltalake_spark.streaming.driver import foreach_batch_scd2
+
+    dest = str(tmp_path / "dest")
+    apply = foreach_batch_scd2(dest, ["id"], "rv")
+    table = _Rows(300)
+    apply(_batch(spark, table, table.rows, str(tmp_path / "b0.parquet")), 0)
+    for b, ids in enumerate(([5, 301], [1, 2, 302]), start=1):
+        table.change(update=ids[:-1], insert=ids[-1:])
+        apply(_batch(spark, table, ids, str(tmp_path / f"b{b}.parquet")), b)
+    lpk = DeltaDestination(dest).latest_pk_version
+    assert lpk._state_at()["num_buckets"]
+    assert _read_probe_route(spark, dest, monkeypatch) == ("footer", 0)
+    want = sorted((i, v, rv) for i, (v, rv) in table.rows.items())
+    _assert_one_pass_read(spark, dest, want)
+
+
+def test_prune_probe_routes_match_the_scan(spark, tmp_path, loaded, monkeypatch):
+    """Whatever route answers the probe, the pruned read equals the
+    unpruned one: on a counted index, one holding a NULL delta value
+    (pruning off), a counted commit from before the NULL count was
+    recorded, a mask and its fold, a bucketized merge and a patch."""
+    import json
+
+    table, dest = loaded
+    lpk = DeltaDestination(dest).latest_pk_version
+
+    def check(route):
+        assert _read_probe_route(spark, dest, monkeypatch)[0] == route
+        pruned = read_current_rows(spark, dest, ["id"], "rv").collect()
+        full = read_current_rows(spark, dest, ["id"], "rv", prune=False).collect()
+        assert sorted(map(tuple, pruned)) == sorted(map(tuple, full))
+        return sorted((r["id"], r["val"], r["rv"]) for r in pruned)
+
+    want = sorted((i, v, rv) for i, (v, rv) in table.rows.items())
+    assert check("metadata") == want
+    # a NULL delta value in the index turns pruning off
+    lpk.write_counted_minmax(
+        spark.createDataFrame([(2, None)], "id long, rv long"), ["rv"], mode="append"
+    )
+    assert lpk.min_and_nulls(spark, "rv") == (1, 1)
+    assert check("metadata") == want
+    # an old commit: the NULL count stripped from the index's head commit
+    head = os.path.join(lpk._commits_dir, f"{lpk.version():010d}.json")
+    with open(head) as fh:
+        commit = json.load(fh)
+    del commit["nulls"]
+    with open(head, "w") as fh:
+        json.dump(commit, fh)
+    assert check("scan") == want
+    # a mask dropping a key's index entries drops its current row; the
+    # fold rewrites the dirs without counts, so the footers answer
+    lpk.delete_where(spark, ("id", "=", 2), lazy=True)
+    want = [w for w in want if w[0] != 2]
+    assert check("scan") == want
+    lpk.fold_masks(spark)
+    assert check("footer") == want
+    # a merge bucketizes the index, then a patch re-upserts an entry the
+    # index already holds
+    entry = lpk.read(spark).filter("id = 1")
+    lpk.merge_upsert(spark, entry, ["id"], num_buckets=4)
+    assert check("footer") == want
+    lpk.merge_upsert(spark, entry, ["id"], strategy="patch")
+    assert lpk._state_at()["patches"]
+    assert check("scan") == want
 
 
 # ------------------------------------------------------------ key diff --
@@ -691,3 +826,86 @@ def test_key_diff_matches_the_cascades(spark, tmp_path, monkeypatch, name):
         assert getattr(got, "dirty", None) == getattr(want, "dirty", None), step
         assert _tables(spark, dests["diff"]) == _tables(spark, dests["cascade"]), step
     assert next(loads["cascade"], None) is None
+
+
+# ------------------------------- current-rows read: equivalence with parent --
+#
+# The earlier read, kept here only as the reference the one-pass read must
+# reproduce: a one-job min/NULL probe over the index, an inner join of the
+# history with the index, and a ``.distinct()``.
+
+
+def _parent_read_current_rows(spark, destination, pk_cols, delta_col):
+    from pyspark.sql import functions as F
+
+    from odbc2deltalake_spark.metadata import SYS
+
+    dest = DeltaDestination(destination)
+    lpk = dest.latest_pk_version.read(spark)
+    skip = None
+    probe = lpk.agg(
+        F.min(delta_col).alias("m"),
+        F.max(F.col(delta_col).isNull()).alias("has_null"),
+    ).first()
+    if probe["m"] is not None and not probe["has_null"]:
+        skip = (delta_col, ">=", probe["m"])
+    hist = dest.delta.read(spark, skip_where=skip).alias("h")
+    right = lpk.select(*pk_cols, delta_col).alias("l")
+    cond = F.col(f"h.`{delta_col}`").eqNullSafe(F.col(f"l.`{delta_col}`"))
+    for c in pk_cols:
+        cond = cond & (F.col(f"h.`{c}`") == F.col(f"l.`{c}`"))
+    return (
+        hist.join(right, on=cond, how="inner")
+        .select("h.*")
+        .filter(~F.col(SYS.is_deleted))
+        .distinct()
+    )
+
+
+def _assert_read_matches_parent(spark, dest, pk_cols, delta_col):
+    from collections import Counter
+
+    def multiset(df):
+        return Counter(tuple(r) for r in df.collect())
+
+    got = multiset(read_current_rows(spark, dest, pk_cols, delta_col))
+    assert got == multiset(
+        _parent_read_current_rows(spark, dest, pk_cols, delta_col)
+    )
+
+
+@pytest.mark.parametrize("name", sorted(_PARITY))
+def test_read_matches_the_parent_read(spark, tmp_path, name):
+    """After each load of every parity sequence, the one-pass read
+    returns the same row multiset as the earlier probe + inner join +
+    distinct read."""
+    from tests.cdc_utils import run_load
+
+    seq, cfg = _PARITY[name]
+    dest = str(tmp_path / "dest")
+    pk_cols, delta_col = (
+        (["id"], "rv") if name == "schema_drift" else (["User_-_iD"], "time_stamp")
+    )
+    loads = seq(
+        spark,
+        _parity_source(spark, name),
+        lambda src: run_load(spark, src, dest, WriteConfig(**cfg), check=False),
+    )
+    for _ in loads:
+        _assert_read_matches_parent(spark, dest, pk_cols, delta_col)
+
+
+def test_stream_read_matches_the_parent_read(spark, tmp_path):
+    """The same over three ``foreach_batch_scd2`` micro-batches: the full
+    batch, the merge that bucketizes the index, and a partial merge."""
+    from odbc2deltalake_spark.streaming.driver import foreach_batch_scd2
+
+    dest = str(tmp_path / "dest")
+    apply = foreach_batch_scd2(dest, ["id"], "rv")
+    table = _Rows(50)
+    batches = [list(table.rows), [5, 51], [1, 2, 52]]
+    for b, ids in enumerate(batches):
+        if b:
+            table.change(update=ids[:-1], insert=ids[-1:])
+        apply(_batch(spark, table, ids, str(tmp_path / f"b{b}.parquet")), b)
+        _assert_read_matches_parent(spark, dest, ["id"], "rv")

@@ -1359,27 +1359,27 @@ def test_delta_check_constraint_grammar_property():
     run()
 
 
-def _probe_route(spark, t, col, monkeypatch):
-    """``t.max_and_count(spark, col)``, checked equal to the scan, and
-    the route that answered it: "metadata" (commit log), "footer"
-    (parquet footers) or "scan"."""
+def _probe_route(spark, t, col, monkeypatch, probe="max_and_count"):
+    """``t.<probe>(spark, col)`` (``max_and_count`` or ``min_and_nulls``),
+    checked equal to the scan, and the route that answered it:
+    "metadata" (commit log), "footer" (parquet footers) or "scan"."""
     import odbc2deltalake_spark.tablestore as ts
 
     sched = spark.sparkContext._jsc.sc().dagScheduler()
     answered = []
-    real = ts.footer_max_and_count
+    real = ts.footer_col_stats
 
     def spy(files, c):
         got = real(files, c)
         answered.append(got is not None)
         return got
 
-    monkeypatch.setattr(ts, "footer_max_and_count", spy)
+    monkeypatch.setattr(ts, "footer_col_stats", spy)
     j0 = sched.nextJobId()
-    got = t.max_and_count(spark, col)
+    got = getattr(t, probe)(spark, col)
     jobs = sched.nextJobId() - j0
-    monkeypatch.setattr(ts, "footer_max_and_count", real)
-    assert got == ts.TableStore.max_and_count(t, spark, col), col
+    monkeypatch.setattr(ts, "footer_col_stats", real)
+    assert got == getattr(ts.TableStore, probe)(t, spark, col), col
     if jobs:
         return "scan"
     return "footer" if any(answered) else "metadata"
@@ -1485,3 +1485,92 @@ def test_max_and_count_from_footers(spark, tmp_path, monkeypatch):
     f.write(_df(spark, [(1, "a")]), mode="overwrite")
     f.merge_upsert(spark, _df(spark, [(2, "b")]), ["id"], num_buckets=4)
     assert route(f) == "scan"
+
+
+def test_min_and_nulls_from_metadata(spark, tmp_path, monkeypatch):
+    """The current-rows prune probe, MIN(col) and the NULL count, answers
+    from the NULL count a counted write records beside ``rows``/
+    ``minmax``, or from the footers' row-group ``min`` and
+    ``null_count``, with zero jobs and the scan's answer. A commit
+    written before the count was recorded, a patch, a mask, a
+    non-integral column and a non-local backend scan."""
+    import json
+
+    from odbc2deltalake_spark.tablestore import FsspecStorageBackend
+    from tests.test_fsspec_backend import LocalLikeFS
+
+    def route(t, col="id"):
+        return _probe_route(spark, t, col, monkeypatch, probe="min_and_nulls")
+
+    t = VersionedParquetTable(tmp_path / "t")
+    t.write_counted_minmax(_df(spark, [(i, "a") for i in range(3, 10)]), ["id"], mode="overwrite")
+    assert t._read_commit(0)["nulls"] == {"id": 0}
+    assert route(t) == "metadata"
+    assert t.min_and_nulls(spark, "id") == (3, 0)
+    t.write_counted_minmax(_df(spark, [(None, "n"), (1, "b")]), ["id"], mode="append")
+    assert route(t) == "metadata"
+    assert t.min_and_nulls(spark, "id") == (1, 1)
+    assert route(t, "v") == "scan"  # non-integral column
+    t.merge_upsert(spark, _df(spark, [(2, "c")]), ["id"], num_buckets=4)
+    assert route(t) == "footer"
+    t.merge_upsert(spark, _df(spark, [(11, "d")]), ["id"], strategy="patch")
+    assert route(t) == "scan"  # a patch chain changes rows in place
+    t.fold_patches(spark)
+    assert route(t) == "footer"
+    t.delete_where(spark, ("id", "=", 2), lazy=True)
+    assert route(t) == "scan"  # a mask hides rows the footers count
+
+    # a counted commit from before the NULL count was recorded
+    old = VersionedParquetTable(tmp_path / "old")
+    old.write_counted_minmax(_df(spark, [(5, "a"), (6, "b")]), ["id"], mode="overwrite")
+    path = tmp_path / "old" / "_commits" / "0000000000.json"
+    commit = json.loads(path.read_text())
+    del commit["nulls"]
+    path.write_text(json.dumps(commit))
+    assert route(old) == "scan"
+    assert _probe_route(spark, old, "id", monkeypatch) == "metadata"
+
+    f = VersionedParquetTable(
+        tmp_path / "f", backend=FsspecStorageBackend(LocalLikeFS())
+    )
+    f.write(_df(spark, [(1, "a")]), mode="overwrite")
+    f.merge_upsert(spark, _df(spark, [(2, "b")]), ["id"], num_buckets=4)
+    assert route(f) == "scan"
+
+
+def test_overwrite_resets_bucket_layout(spark, tmp_path):
+    """An overwrite (or a restore) replaces the bucket layout along with
+    the dirs: a plain overwrite of a bucketized table leaves no bucket
+    count, so compaction and a later bucketization start afresh, also
+    when the state is replayed from a checkpoint."""
+    t = VersionedParquetTable(tmp_path / "t")
+    t.write(_df(spark, [(1, "a"), (2, "b")]), mode="overwrite")
+    t.merge_upsert(spark, _df(spark, [(3, "c")]), ["id"], num_buckets=2)
+    v_bucketized = t.version()
+    t.checkpoint()  # the checkpointed base still holds the layout
+    assert t._state_at()["num_buckets"] == 2
+    t.write(_df(spark, [(4, "d")]), mode="overwrite")
+    keys = _df(spark, [(4, "d")]).select("id")
+
+    def no_layout():
+        for st in (t._state_at(), t._state_at(use_checkpoint=False)):
+            layout = (st["num_buckets"], st["bucket_cols"], st["bucket_key_types"])
+            assert layout == (None, None, None)
+        assert t.buckets_for_keys(keys, ["id"]) is None
+
+    no_layout()  # the overwrite replayed over the bucketized checkpoint
+    t.checkpoint()
+    no_layout()  # read back from a checkpoint of the overwritten state
+    t.compact(spark, out_partitions=1)
+    assert [tuple(r) for r in t.read(spark).collect()] == [(4, "d")]
+
+    # a restore takes the layout of the version it restores
+    t.restore(v_bucketized)
+    assert t._state_at()["num_buckets"] == 2
+    t.restore(0)
+    assert t._state_at()["num_buckets"] is None
+    t.merge_upsert(spark, _df(spark, [(5, "e")]), ["id"], num_buckets=4)
+    assert t._state_at()["num_buckets"] == 4
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == [
+        (1, "a"), (2, "b"), (5, "e"),
+    ]
