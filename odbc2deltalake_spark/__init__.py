@@ -6,8 +6,8 @@ bmsuisse/odbc2deltalake (the reference), re-expressed Spark-first:
 - DataFrame / Spark SQL declarative plans (Catalyst optimizes; no SQL
   string generation for local operations).
 - A versioned Parquet table store (commit log + time travel + MERGE)
-  standing in for Delta Lake where delta-spark is unavailable; the same
-  writer API binds to Delta when the jars are present.
+  standing in for Delta Lake; the engine reaches it only through the
+  ``TableStore`` interface, the surface a Delta backend would implement.
 - SCD2 history maintenance: full loads, incremental delta loads driven by
   a monotonic delta column, delete detection via key-set EXCEPT, "strange"
   (timestamp-inconsistent) update repair, and a `latest_pk_version`

@@ -47,6 +47,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from odbc2deltalake_spark.session import SparkThreadPool
 from odbc2deltalake_spark.tablestore import VersionedParquetTable
 
 # Okapi BM25 constants — CANONICAL HOME (ADVICE r12): queries/text_ops.py
@@ -110,8 +111,6 @@ class Bm25Index:
         # uncommitted torn batch exactly as the sequential order did
         # (ordering BETWEEN the two side tables was never part of the
         # read contract; only counters gates batch visibility in idf).
-        from concurrent.futures import ThreadPoolExecutor
-
         def _write_postings() -> None:
             self.postings.write(
                 tf.repartition(_POSTING_SLICES, "w"),
@@ -131,7 +130,7 @@ class Bm25Index:
                 F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sdl")
             ).collect()[0]
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
+        with SparkThreadPool(tf.sparkSession, 2) as pool:
             f_post = pool.submit(_write_postings)
             f_stats = pool.submit(_write_docstats_and_count)
             row = f_stats.result()

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from odbc2deltalake_spark.session import SparkThreadPool
 from odbc2deltalake_spark.tablestore import VersionedParquetTable
 
 N_HASHES = 8
@@ -119,10 +120,8 @@ class DedupIndex:
         # both read the eagerly checkpointed signatures — write them
         # concurrently; crash states equal the sequential torn pairs
         # check_consistent() already detects
-        from concurrent.futures import ThreadPoolExecutor
-
         sigs = signature_df(docs).localCheckpoint(eager=True)
-        with ThreadPoolExecutor(max_workers=2) as pool:
+        with SparkThreadPool(sigs.sparkSession, 2) as pool:
             f_sigs = pool.submit(self.sigs.write, sigs, mode="overwrite")
             f_bands = pool.submit(
                 self.bands.write,
@@ -202,9 +201,7 @@ class DedupIndex:
         # concurrently; the documented skew window (crash between the
         # two commits, reconciled by re-run / check_consistent) is
         # unchanged in kind, only its ordering is no longer fixed
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
+        with SparkThreadPool(new_sigs.sparkSession, 2) as pool:
             f_s = pool.submit(self.sigs.write, new_sigs, mode="append")
             f_b = pool.submit(
                 self.bands.write,

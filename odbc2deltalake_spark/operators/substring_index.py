@@ -43,6 +43,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from odbc2deltalake_spark.session import SparkThreadPool
 from odbc2deltalake_spark.tablestore import VersionedParquetTable
 
 _GRAM_SLICES = 8  # doc_id hash-slices (files) per update batch
@@ -108,10 +109,8 @@ class SubstringIndex:
         version is the return value, as before) is the caller-visible
         commit either way; a crash mid-call leaves the same
         torn-two-table states the sequential order could."""
-        from concurrent.futures import ThreadPoolExecutor
-
         g = positional_grams(docs, self.k).localCheckpoint(eager=True)
-        with ThreadPoolExecutor(max_workers=2) as pool:
+        with SparkThreadPool(g.sparkSession, 2) as pool:
             f_grams = pool.submit(
                 self.grams.write,
                 g.repartition(_GRAM_SLICES, "doc_id"),

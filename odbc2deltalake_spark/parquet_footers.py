@@ -34,7 +34,8 @@ def footer_col_stats(
     parquet, lacks ``col`` as a top-level column, stores it as anything
     but a signed integer (other types' footer bounds may be truncated or
     need a logical-type conversion), or has a row group without min/max
-    statistics (an all-NULL one has none)."""
+    statistics that is not all NULL (an all-NULL row group has no bounds
+    and adds only its rows and nulls)."""
     try:
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -62,11 +63,15 @@ def footer_col_stats(
         if leaf is None:
             return None
         for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(leaf).statistics
-            if st is None or not st.has_min_max:
+            group = md.row_group(rg)
+            st = group.column(leaf).statistics
+            if st is None:
                 return None
-            low = st.min if low is None else min(low, st.min)
-            top = st.max if top is None else max(top, st.max)
+            if st.has_min_max:
+                low = st.min if low is None else min(low, st.min)
+                top = st.max if top is None else max(top, st.max)
+            elif not (st.has_null_count and st.null_count == group.num_rows):
+                return None  # bounds missing, and not because all NULL
             if nulls is not None:
                 nulls = nulls + st.null_count if st.has_null_count else None
     return ColStats(low, top, rows, nulls if col is not None else None)

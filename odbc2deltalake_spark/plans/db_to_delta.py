@@ -54,6 +54,7 @@ from odbc2deltalake_spark.operators.scd2 import (
     latest_pk_union,
 )
 from odbc2deltalake_spark.plans.destination import DeltaDestination, DeltaLogger
+from odbc2deltalake_spark.session import SparkThreadPool
 from odbc2deltalake_spark.sources.base import Source
 
 
@@ -131,10 +132,9 @@ class _Ctx:
         strange updates) are simply never pruned — skipping is
         conservative by construction.
 
-        The append counts its rows as they are written; on a store
-        without ``commits_empty_appends`` a zero-row append publishes no
-        commit, so a batch the caller cannot size in advance needs no
-        emptiness probe."""
+        The append counts its rows as they are written and a zero-row
+        append publishes no commit, so a batch the caller cannot size in
+        advance needs no emptiness probe."""
         known = {SYS.timestamp: (self.load_ts, self.load_ts)}
         if (
             delta_interval is not None
@@ -405,9 +405,7 @@ def do_delta_load(ctx: _Ctx, simple: bool = False, simple_check: bool = False) -
     # job's tasks back-fill the first's tail (guide §2.6; on a cluster
     # the source probe is remote-RDBMS latency the local job need not
     # wait behind)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    with SparkThreadPool(ctx.spark, 2) as pool:
         f_local = pool.submit(_local_value_and_count, ctx)
         f_src = pool.submit(
             ctx.source.max_and_count, ctx.spark, _source_delta_name(ctx)
@@ -476,7 +474,7 @@ def do_delta_load(ctx: _Ctx, simple: bool = False, simple_check: bool = False) -
         # history-missing equals a sequential crash before step 2's
         # append: the unchanged index keeps the old watermark and the
         # next load re-extracts.
-        with ThreadPoolExecutor(max_workers=2) as pool:
+        with SparkThreadPool(ctx.spark, 2) as pool:
             f_hist = pool.submit(_step2_append, n1, mm)
             f_pre = pool.submit(_finish_simple_prefix, ctx)
             f_pre.result()
@@ -493,7 +491,7 @@ def do_delta_load(ctx: _Ctx, simple: bool = False, simple_check: bool = False) -
     # (_local_value_and_count reads the COMMITTED latest_pk_version, so
     # orphan staging rows are invisible until a later load re-indexes
     # them).
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    with SparkThreadPool(ctx.spark, 2) as pool:
         f1 = pool.submit(_step1)
         f2 = pool.submit(_step2_write)
         f1.result()
@@ -516,7 +514,7 @@ def do_delta_load(ctx: _Ctx, simple: bool = False, simple_check: bool = False) -
     # nothing but (at most) the delta_2 reset — a sequential crash inside
     # step 3; both states the restore path already tolerates.
     assert old_pk_version is not None
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    with SparkThreadPool(ctx.spark, 2) as pool:
         f_hist = pool.submit(_step2_append, n1, mm)
         f_diff = pool.submit(_key_diff, ctx, old_pk_version)
         diff = f_diff.result()
@@ -533,7 +531,7 @@ def do_delta_load(ctx: _Ctx, simple: bool = False, simple_check: bool = False) -
     # latest_pk_version, so the next load diffs against the same old
     # index and derives the same deleted keys again.
     logger.info("Delta step 3.5: write deletes")
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    with SparkThreadPool(ctx.spark, 2) as pool:
         f_del = pool.submit(_do_deletes, ctx, diff)
         f4 = pool.submit(_write_latest_pk, ctx, diff, delta_load_value)
         f_del.result()
@@ -774,7 +772,7 @@ def _do_deletes(ctx: _Ctx, diff: _KeyDiff) -> None:
     assert ctx.delta_name is not None
     if not diff.rewound:
         # counted with the diff: a zero-delete load runs no job here and
-        # appends nothing, on every store
+        # appends nothing
         if not diff.deleted:
             return
         dels = diff.keys.filter(key_diff_deleted()).select(*ctx.pk_names)
@@ -788,10 +786,6 @@ def _do_deletes(ctx: _Ctx, diff: _KeyDiff) -> None:
                 how="left_anti",
             )
         )
-        # a store that would commit a zero-row append as an empty version
-        # keeps the emptiness probe; the others drop the empty append itself
-        if dest.delta.commits_empty_appends and dels.isEmpty():
-            return
     # the diff's partitioning would spread a handful of tombstones over
     # one small file per partition; size the files by the deleted count
     dels = dels.coalesce(max(1, -(-diff.deleted // TOMBSTONE_ROWS_PER_FILE)))

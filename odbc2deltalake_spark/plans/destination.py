@@ -28,6 +28,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from odbc2deltalake_spark.metadata import ColInfo
+from odbc2deltalake_spark.session import SparkThreadPool
 from odbc2deltalake_spark.tablestore import TableStore, VersionedParquetTable
 
 LOCK_LEASE_SECONDS = 3600  # reference:odbc2deltalake/db_to_delta.py:221-228
@@ -38,43 +39,36 @@ class LockHeldError(Exception):
 
 
 class DeltaDestination:
-    """Destination layout over a pluggable :class:`TableStore`.
+    """Destination layout: each table is a :class:`VersionedParquetTable`,
+    used by the engine only through the :class:`TableStore` surface."""
 
-    ``store_factory(path) -> TableStore`` selects the physical table
-    format: the default commit-log parquet store, or
-    ``DeltaTableStore`` (odbc2deltalake_spark/delta_store.py) for
-    standard Delta Lake output where delta-spark is installed —
-    ``DeltaDestination(root, store_factory=DeltaTableStore)``.
-    """
-
-    def __init__(self, root: str | Path, store_factory=VersionedParquetTable):
+    def __init__(self, root: str | Path):
         self.root = Path(root)
-        self._store = store_factory
 
     # tables
     @property
     def delta(self) -> TableStore:
-        return self._store(self.root / "delta")
+        return VersionedParquetTable(self.root / "delta")
 
     @property
     def delta_1(self) -> TableStore:
-        return self._store(self.root / "delta_load" / "delta_1")
+        return VersionedParquetTable(self.root / "delta_load" / "delta_1")
 
     @property
     def delta_2(self) -> TableStore:
-        return self._store(self.root / "delta_load" / "delta_2")
+        return VersionedParquetTable(self.root / "delta_load" / "delta_2")
 
     @property
     def primary_keys_ts(self) -> TableStore:
-        return self._store(self.root / "delta_load" / "primary_keys_ts")
+        return VersionedParquetTable(self.root / "delta_load" / "primary_keys_ts")
 
     @property
     def latest_pk_version(self) -> TableStore:
-        return self._store(self.root / "delta_load" / "latest_pk_version")
+        return VersionedParquetTable(self.root / "delta_load" / "latest_pk_version")
 
     @property
     def log_table(self) -> TableStore:
-        return self._store(self.root / "log")
+        return VersionedParquetTable(self.root / "log")
 
     # meta
     def write_schema_json(self, cols: list[ColInfo]) -> None:
@@ -138,39 +132,22 @@ class DeltaDestination:
         checkpoint cadence govern these tables with the same measured
         trade-offs as any other store table — the side tables are
         rewritten every load, exactly the churn profile the window is
-        for. Stores without the window (DeltaTableStore delegates
-        OPTIMIZE/VACUUM to the Delta runtime) fall back to plain
-        vacuum. Returns {table: outcome} for the ops log.
+        for. Returns {table: outcome} for the ops log.
 
         r14: the four side tables live in disjoint directories and their
         maintenance never crosses tables, so the per-table passes run
         from a small thread pool (guide §2.6) — post-load wall for the
         window drops to the slowest table instead of the sum."""
-        from concurrent.futures import ThreadPoolExecutor
 
-        def _one(name: str) -> tuple[str, dict] | None:
+        def _one(name: str) -> Optional[dict]:
             t = getattr(self, name)
-            if not t.exists():
-                return None
-            maintain = getattr(t, "auto_maintain", None)
-            if maintain is not None:
-                # DeltaTableStore defines auto_maintain as a loud refusal
-                # (the window's decision inputs are parquet-store
-                # metadata), so dispatch must catch it — attribute
-                # existence alone would make the fallback unreachable
-                # and fail every Delta-backed load post-write (ADVICE
-                # r10, high).
-                try:
-                    return name, maintain(spark, vacuum_now=True)
-                except NotImplementedError:
-                    return name, {"vacuum_removed": len(t.vacuum())}
-            return name, {"vacuum_removed": len(t.vacuum())}
+            return t.auto_maintain(spark, vacuum_now=True) if t.exists() else None
 
         names = ("latest_pk_version", "delta_1", "delta_2",
                  "primary_keys_ts")
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            results = list(pool.map(_one, names))
-        return {name: outcome for r in results if r for name, outcome in [r]}
+        with SparkThreadPool(spark, 4) as pool:
+            outcomes = list(pool.map(_one, names))
+        return {n: o for n, o in zip(names, outcomes) if o is not None}
 
 
 _LOG_SCHEMA = T.StructType(

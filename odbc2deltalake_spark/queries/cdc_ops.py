@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from odbc2deltalake_spark.queries.registry import load_table, register
+from odbc2deltalake_spark.session import SparkThreadPool
 
 # ---------------------------------------------------------------- W1 ----
 
@@ -1536,10 +1537,9 @@ def store_shallow_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFram
 # CHECK over existing-valid rows, an enforced append passes, a
 # violating batch REFUSES atomically (no partial rows), the structured
 # read-back returns the conjuncts, and the surviving table equals the
-# plain SQL filter. Delta's ADD CONSTRAINT semantics
-# (delta.constraints.* — DeltaTableStore translates both directions,
-# delta_store.py:check_constraints); the reference relies on Delta's
-# runtime for this, so the engine's own store must carry it natively.
+# plain SQL filter. Delta's ADD CONSTRAINT semantics (delta.constraints.*);
+# the reference relies on Delta's runtime for this, so the engine's own
+# store must carry it natively.
 
 _CHECK_GATE_ORACLE = """
 SELECT doc_id, lang, source, n_chars
@@ -1561,9 +1561,8 @@ def store_check_constraint_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     appends the rest of the valid rows THROUGH enforcement, then
     asserts in-query that (a) a violating batch refuses atomically —
     rows and version both untouched, (b) the structured read-back
-    returns the exact conjuncts (the same surface DeltaTableStore
-    round-trips via delta.constraints.*). Only then is the table
-    hashed against the oracle."""
+    returns the exact conjuncts. Only then is the table hashed against
+    the oracle."""
     import shutil
     import tempfile
 
@@ -1942,11 +1941,9 @@ def stream_cdc_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sequential jobs — the two tombstone counts now ride ONE
         # aggregate over the history scan, overlapped with the delta_2
         # count (disjoint tables) from a 2-thread pool.
-        from concurrent.futures import ThreadPoolExecutor
-
         hist = dest.delta.read(spark)
         tombs = hist.filter(F.col("__is_deleted"))
-        with ThreadPoolExecutor(max_workers=2) as pool:
+        with SparkThreadPool(spark, 2) as pool:
             f_d2 = pool.submit(dest.delta_2.read(spark).count)
             f_tomb = pool.submit(
                 tombs.agg(

@@ -25,6 +25,7 @@ from odbc2deltalake_spark.operators.clustering import (
     kmeans_summary,
 )
 from odbc2deltalake_spark.queries.registry import load_table, register
+from odbc2deltalake_spark.session import SparkThreadPool
 
 _K = 8
 _ITERS = 3
@@ -134,9 +135,7 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wave 11: that job is data-independent of the codebook fit, so it
     # rides the fit chain from a thread (guide §2.6) instead of
     # serializing after it.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as _pool:
+    with SparkThreadPool(spark, 1) as _pool:
         _f_meta = _pool.submit(
             vectors.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -203,9 +202,7 @@ def sim_ann_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sim_ann_pq); wave 11: the job is data-independent of the
     # rotation fit and the codebook fit, so it rides that chain from a
     # thread (guide §2.6) — q is only consumed after the fit anyway.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as _pool:
+    with SparkThreadPool(spark, 1) as _pool:
         _f_meta = _pool.submit(
             vectors.agg(
                 F.count(F.lit(1)).alias("n"),

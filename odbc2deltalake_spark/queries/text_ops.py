@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from odbc2deltalake_spark.queries.registry import load_table, register
+from odbc2deltalake_spark.session import SparkThreadPool
 
 # ------------------------------------------------------- token count ----
 
@@ -1211,9 +1212,7 @@ def hybrid_index_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sem_rank"),
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
+        with SparkThreadPool(spark, 2) as pool:
             f_lex = pool.submit(_lex_pipeline)
             f_sem = pool.submit(_sem_pipeline)
             lex_rank = f_lex.result()

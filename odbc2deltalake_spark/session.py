@@ -11,7 +11,9 @@ Python<->JVM boundary, and ZSTD parquet compression
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 
@@ -29,6 +31,23 @@ def shuffle_parallelism(spark: SparkSession, default: int = 32) -> int:
             return int(spark.sparkContext.defaultParallelism)
         except Exception:
             return default
+
+
+class SparkThreadPool(ThreadPoolExecutor):
+    """The engine's one thread pool: each submitted callable runs under
+    the submitting thread's Spark local properties (job group, job
+    description, scheduler pool), via ``pyspark.inheritable_thread_target``.
+    Local properties are per thread, so a plain pool's jobs would drop the
+    caller's job group and ``cancelJobGroup`` could not stop them."""
+
+    def __init__(self, spark: SparkSession, max_workers: int):
+        super().__init__(max_workers=max_workers)
+        self._spark = spark
+
+    def submit(self, fn, /, *args, **kwargs):
+        return super().submit(
+            inheritable_thread_target(self._spark)(fn), *args, **kwargs
+        )
 
 
 def get_spark(

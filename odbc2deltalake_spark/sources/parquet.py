@@ -89,8 +89,8 @@ class ParquetTableSource(Source):
         row-group ``max`` of the delta column — zero Spark jobs, the
         file-format analog of pushing the aggregate to a JDBC server.
         Falls back to the scan unless the delta column is a signed
-        integer with min/max statistics in every row group (an all-NULL
-        row group has none)."""
+        integer with min/max statistics in every row group that is not
+        all NULL."""
         got = (
             footer_col_stats([self.path], delta_col)
             if Path(self.path).is_file()

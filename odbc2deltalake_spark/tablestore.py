@@ -1,8 +1,8 @@
 """Versioned Parquet table store — the engine's Delta-Lake stand-in.
 
-delta-spark is not available in this environment, so the engine ships its
-own minimal transactional table layer with the Delta features the reference
-relies on (reference:odbc2deltalake/reader/reader.py:13-32 ``DeltaOps``):
+The engine ships its own minimal transactional table layer with the Delta
+features the reference relies on (reference:odbc2deltalake/reader/reader.py:13-32
+``DeltaOps``):
 
 - append / overwrite writes with schema evolution ("new_only" union)
 - version history + time travel (``versionAsOf``)
@@ -13,6 +13,10 @@ relies on (reference:odbc2deltalake/reader/reader.py:13-32 ``DeltaOps``):
   (reference:odbc2deltalake/reader/spark_reader.py:329-350) — hash-bucketed
   so a merge rewrites only the buckets containing changed keys
 - vacuum of unreferenced files
+
+:class:`TableStore` is the part of it the CDC engine calls, and the surface
+a Delta Lake backend would implement; :class:`VersionedParquetTable`
+implements it and adds the store features above it.
 
 Layout::
 
@@ -443,20 +447,14 @@ def _merge_schemas(old: T.StructType, new: T.StructType) -> T.StructType:
 
 
 class TableStore(ABC):
-    """The exact table surface the engine uses — extracted so the
-    commit-log store here and a real Delta Lake store
-    (:class:`odbc2deltalake_spark.delta_store.DeltaTableStore`) are
-    drop-in interchangeable. Mirrors the reference's ``DeltaOps``
-    abstraction (reference:odbc2deltalake/reader/reader.py:13-32); the
-    plans layer (plans/destination.py, plans/db_to_delta.py) talks only to
-    this interface.
+    """The exact table surface the engine uses: every method here is
+    called by the plans layer (plans/destination.py, plans/db_to_delta.py)
+    or the streaming sinks, and the engine calls nothing else
+    (tests/test_tablestore.py::test_engine_calls_exactly_the_table_store_surface
+    records it). Mirrors the reference's ``DeltaOps`` abstraction
+    (reference:odbc2deltalake/reader/reader.py:13-32); another table
+    format plugs in by implementing these methods.
     """
-
-    #: whether a counted append of zero rows (:meth:`write_counted_minmax`)
-    #: still commits an empty version. A store that cannot withdraw a
-    #: written commit says True, and callers that cannot size a batch
-    #: in advance probe its emptiness before appending.
-    commits_empty_appends: bool = True
 
     @abstractmethod
     def exists(self) -> bool: ...
@@ -473,17 +471,13 @@ class TableStore(ABC):
         self,
         spark: SparkSession,
         version: Optional[int] = None,
-        buckets: Optional[Iterable[int]] = None,
         skip_where: Optional[tuple[str, str, Any] | list[tuple[str, str, Any]]] = None,
     ) -> DataFrame:
         """Snapshot read, optionally time-traveled to ``version``.
-        ``buckets`` is an optional file-pruning hint; stores without
-        bucket layout may ignore it (correctness never depends on it).
         ``skip_where=(col, op, value)`` is a pruning hint + residual
         filter: implementations MUST at minimum apply the predicate
         (results equal an unpruned filter) and MAY use recorded stats
-        to skip files — the engine passes it on every store, so it is
-        part of the interface contract, not an extension."""
+        to skip files."""
 
     @abstractmethod
     def write(
@@ -491,26 +485,15 @@ class TableStore(ABC):
         df: DataFrame,
         mode: str = "append",
         merge_schema: bool = False,
-        overwrite_schema: bool = False,
-        partition_by: Optional[list[str]] = None,
-        extra_commit_fields: Optional[dict[str, Any]] = None,
-        stats_cols: Optional[list[str]] = None,
-        per_file_stats: bool = False,
         known_stats: Optional[dict[str, tuple[Any, Any]]] = None,
         txn: Optional[tuple[str, int]] = None,
-        bloom_cols: Optional[list[str]] = None,
-        bloom_bits: Optional[int] = None,  # None = auto-size from rows/file
-        identity_col: Optional[str] = None,
         observed: Optional[tuple[Any, list[str]]] = None,
     ) -> int:
-        """Write one commit. The stats/commit-field parameters (and
-        ``observed``, the row-count Observation :meth:`write_counted_minmax`
-        attached to ``df``) are data-skipping and audit metadata hints: a
-        store without its own stats machinery MUST accept and may ignore
-        them (Delta collects native file stats, so its implementation
-        treats them as no-ops);
-        ignoring ``skip_where``'s pruning half is always safe because
-        the read applies the residual predicate.
+        """Write one commit. ``known_stats`` and ``observed`` (the
+        row-count Observation :meth:`write_counted_minmax` attached to
+        ``df``) are data-skipping metadata hints a store may ignore; a
+        store that records ``observed`` publishes no version for a
+        zero-row append.
 
         ``txn=(app_id, version)`` requests idempotent-writer semantics
         (Delta's ``txnAppId``/``txnVersion``): the write is SKIPPED when
@@ -523,59 +506,21 @@ class TableStore(ABC):
     def restore(self, version: int) -> int: ...
 
     @abstractmethod
-    def set_properties(self, props: dict[str, str]) -> int: ...
-
-    @abstractmethod
-    def get_property(self, name: str) -> Optional[str]: ...
-
-    @abstractmethod
-    def vacuum(self, retain_versions: int = 1, **kwargs: Any) -> list[str]: ...
-
-    @abstractmethod
     def delete_table(self) -> None: ...
 
     @abstractmethod
-    def delete_where(
-        self,
-        spark: SparkSession,
-        predicate: tuple[str, str, Any] | list[tuple[str, str, Any]],
-        stats_cols: Optional[list[str]] = None,
-    ) -> dict[str, Any]:
-        """Merge-on-write DELETE: remove rows matching the predicate
-        (one (col, op, value) or a list ANDed), rewriting only affected
-        files. SQL semantics — a NULL predicate keeps the row. Returns
-        {version, rows_deleted, ...}; a zero-match delete MUST NOT
-        commit. ``stats_cols`` is a skipping hint stores may ignore."""
-
-    @abstractmethod
-    def update_where(
-        self,
-        spark: SparkSession,
-        set_exprs: dict[str, Any],
-        predicate: tuple[str, str, Any] | list[tuple[str, str, Any]],
-        stats_cols: Optional[list[str]] = None,
-    ) -> dict[str, Any]:
-        """Merge-on-write UPDATE: apply ``set_exprs`` (col → SQL
-        expression or Column) to rows matching the predicate. Returns
-        {version, rows_updated, ...}; zero-match MUST NOT commit."""
-
-    @abstractmethod
     def merge_upsert(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        key_cols: list[str],
-        num_buckets: Optional[int] = None,
-        target_bucket_rows: Optional[int] = None,
-        extra_commit_fields: Optional[dict[str, Any]] = None,
+        self, spark: SparkSession, source: DataFrame, key_cols: list[str]
     ) -> int:
         """Upsert on key equality (whenMatchedUpdateAll /
-        whenNotMatchedInsertAll). Bucketing params are physical-layout
-        hints for stores that implement their own file pruning.
-        ``extra_commit_fields`` ride the SAME commit as the merged data
-        where the store's log supports it (``set_props`` entries become
-        atomically-applied table properties — the Delta txnAppId/
-        txnVersion pattern for exactly-once writers)."""
+        whenNotMatchedInsertAll)."""
+
+    @abstractmethod
+    def auto_maintain(
+        self, spark: SparkSession, vacuum_now: bool = False
+    ) -> dict[str, Any]:
+        """One post-load maintenance window (fold, compact, checkpoint,
+        vacuum); returns {step: outcome} for the ops log."""
 
     def write_counted(
         self,
@@ -608,8 +553,7 @@ class TableStore(ABC):
         its change-set writes and feeds the bounds forward as
         ``known_stats`` on the history append. The Observation is handed
         to :meth:`write` as ``observed``: a store that records it keeps
-        the count and bounds on the commit, and a zero-row append commits
-        an empty version only where ``commits_empty_appends``."""
+        the count and bounds on the commit."""
         cols = [c for c in minmax_cols if c in df.columns]
         df, obs = _observe_count_minmax(df, cols)
         v = self.write(
@@ -757,9 +701,6 @@ def _unrepresentable(v: int, mode: str) -> ValueError:
 
 
 class VersionedParquetTable(TableStore):
-    # a zero-row counted append removes its dir before the commit
-    commits_empty_appends = False
-
     def __init__(self, root: str | Path, backend: Optional[StorageBackend] = None):
         self.root = Path(root) if not isinstance(root, Path) else root
         self._root_str = str(root)

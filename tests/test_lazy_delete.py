@@ -651,9 +651,9 @@ def test_lazy_mask_on_patched_table_folds_first_and_is_exact(spark, tmp_path):
     (matches), mask deletes val=10 — fencing would filter the patch row,
     drop k from the patch key set, and RESURFACE the base val=5 row.
     The pinned semantics: a lazy mutation on a patched table force-folds
-    the chain first (cost measured in tools/mask_patch_study.py /
-    SCALE.md), then masks the folded dirs; correctness is identical to
-    eager DML."""
+    the chain first (cost measured by a one-off study script in commit
+    8de8e4c, SCALE.md), then masks the folded dirs; correctness is
+    identical to eager DML."""
     import uuid as _uuid
 
     t = VersionedParquetTable(tmp_path / f"t{_uuid.uuid4().hex[:8]}")

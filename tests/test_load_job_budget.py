@@ -156,30 +156,27 @@ def test_zero_delete_load_commits_no_tombstones(spark, tmp_path, loaded):
     assert hist.read(spark).filter("__is_deleted").count() == 0
 
 
-def test_store_that_commits_empty_appends_keeps_the_probe(
-    spark, tmp_path, loaded, monkeypatch
-):
-    """A store that would commit a zero-row append as an empty version
-    (Delta cannot withdraw a written commit) keeps the emptiness probe:
-    a zero-delete load makes no tombstone append there at all."""
+def test_every_job_of_a_load_carries_the_callers_job_group(spark, tmp_path, loaded):
+    """The engine's pool threads run under the caller's Spark local
+    properties, so every job of a warm delta load is in the job group
+    set around it and ``cancelJobGroup`` can stop all of them."""
     table, dest = loaded
-    hist = DeltaDestination(dest).delta
-    monkeypatch.setattr(VersionedParquetTable, "commits_empty_appends", True)
-    appends = []
-    real = TableStore.write_counted_minmax
-
-    def spy(self, df, minmax_cols, mode="append", **kw):
-        if mode == "append" and self._root_str == hist._root_str:
-            appends.append(df)
-        return real(self, df, minmax_cols, mode=mode, **kw)
-
-    monkeypatch.setattr(TableStore, "write_counted_minmax", spy)
-    v0 = hist.version()
-    table.change(update=[7], insert=[400])
-    res, _ = _load(spark, table.write(str(tmp_path / "s2.parquet")), dest)
-    assert isinstance(res, DeltaLoadResult) and not res.dirty
-    assert len(appends) == 1  # the change set; no tombstone append
-    assert hist.version() == v0 + 1
+    table.change(update=[1, 2], insert=[302], delete=[10])
+    src = table.write(str(tmp_path / "s2.parquet"))
+    sc = spark.sparkContext
+    sc.setJobGroup("load-1", "warm delta load")
+    try:
+        res, jobs = _load(spark, src, dest)
+        j1 = _jobs(spark)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert isinstance(res, DeltaLoadResult) and jobs > 0
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    in_group = set(sc.statusTracker().getJobIdsForGroup("load-1"))
+    missing = sorted(set(range(j1 - jobs, j1)) - in_group)
+    assert not missing, f"{len(missing)} of {jobs} jobs lack the group: {missing}"
 
 
 def test_delete_bearing_load_lands_tombstones(spark, tmp_path, loaded):
@@ -380,6 +377,12 @@ def test_prune_probe_routes_match_the_scan(spark, tmp_path, loaded, monkeypatch)
     # index already holds
     entry = lpk.read(spark).filter("id = 1")
     lpk.merge_upsert(spark, entry, ["id"], num_buckets=4)
+    assert check("footer") == want
+    # a NULL entry merged into the bucketized index: its footers count
+    # the NULL, so pruning stays off
+    null_entry = spark.createDataFrame([(2, None)], "id long, rv long")
+    lpk.merge_upsert(spark, null_entry, ["id"])
+    assert lpk.min_and_nulls(spark, "rv") == (1, 1)
     assert check("footer") == want
     lpk.merge_upsert(spark, entry, ["id"], strategy="patch")
     assert lpk._state_at()["patches"]

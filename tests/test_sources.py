@@ -775,6 +775,14 @@ def test_parquet_probe_reads_footers_of_an_integral_column(spark, tmp_path):
     got, jobs, scan = _probe(spark, ParquetTableSource(p), None)
     assert got == scan == (None, 1000) and jobs == 0
 
+    # nullable delta column with an all-NULL row group: no min/max there,
+    # but its null count equals its row count, so it adds only its rows
+    p = str(tmp_path / "nulls.parquet")
+    rv = [None] * 100 + list(range(100))
+    pq.write_table(pa.table({"id": list(range(200)), "rv": pa.array(rv, pa.int64())}), p, row_group_size=100)
+    got, jobs, scan = _probe(spark, ParquetTableSource(p), "rv")
+    assert got == scan == (99, 200) and jobs == 0
+
 
 def test_parquet_probe_falls_back_to_the_scan(spark, tmp_path):
     """Every case the footers cannot answer exactly scans, and agrees."""
@@ -782,13 +790,6 @@ def test_parquet_probe_falls_back_to_the_scan(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from odbc2deltalake_spark import ParquetTableSource
-
-    # nullable delta column with an all-NULL row group: no min/max there
-    p = str(tmp_path / "nulls.parquet")
-    rv = [None] * 100 + list(range(100))
-    pq.write_table(pa.table({"id": list(range(200)), "rv": pa.array(rv, pa.int64())}), p, row_group_size=100)
-    got, jobs, scan = _probe(spark, ParquetTableSource(p), "rv")
-    assert got == scan == (99, 200) and jobs > 0
 
     # binary rowversion column
     p = str(tmp_path / "bin.parquet")

@@ -5,6 +5,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+import pytest as _pytest
+
+from odbc2deltalake_spark import WriteConfig
 from odbc2deltalake_spark.tablestore import VersionedParquetTable
 
 
@@ -584,39 +587,10 @@ def test_merge_key_type_widening_rebucketizes(spark, tmp_path):
 # ------------------------------------------------- interface conformance --
 
 
-def _store_factories():
-    import pytest
-
-    factories = [pytest.param(VersionedParquetTable, id="parquet-commitlog")]
-    try:
-        from odbc2deltalake_spark.delta_store import DeltaTableStore
-
-        DeltaTableStore.__init__  # touch
-        import delta  # noqa: F401
-
-        factories.append(pytest.param(DeltaTableStore, id="delta-spark"))
-    except ImportError:
-        factories.append(
-            pytest.param(
-                None,
-                id="delta-spark",
-                marks=pytest.mark.skip(reason="delta-spark not installed"),
-            )
-        )
-    return factories
-
-
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize("factory", _store_factories())
-def test_table_store_interface_conformance(spark, tmp_path, factory):
-    """The full TableStore surface the plans layer relies on, run
-    identically against the commit-log parquet store and (where installed)
-    the real Delta Lake store — the drop-in guarantee."""
-    from odbc2deltalake_spark.tablestore import TableStore
-
-    t: TableStore = factory(tmp_path / "t")
+def test_table_store_interface_conformance(spark, tmp_path):
+    """One pass over the store's core surface: writes, time travel,
+    merge, properties, merge-on-write DML, restore, vacuum and drop."""
+    t = VersionedParquetTable(tmp_path / "t")
     assert not t.exists()
     v0 = t.write(_df(spark, [(1, "a"), (2, "b")]), mode="overwrite")
     assert t.exists() and t.version() == v0
@@ -648,6 +622,74 @@ def test_table_store_interface_conformance(spark, tmp_path, factory):
     assert {r["id"] for r in t.read(spark).collect()} == {1, 2}
     t.delete_table()
     assert not t.exists()
+
+
+def test_engine_calls_exactly_the_table_store_surface(spark, tmp_path, monkeypatch):
+    """The TableStore ABC is the table surface the engine uses, no more
+    and no less. A lifecycle (full, delta, failed and restored, no-op and
+    simple_delta loads with their consistency checks, a current-rows read and
+    an exactly-once append) runs on recording tables; the methods that
+    engine modules (plans/*, streaming/driver.py) call on them equal
+    the ABC's public methods, and every keyword they pass is a parameter
+    of the ABC's signature. Calls a table makes on itself don't count."""
+    import inspect
+    import sys
+
+    from odbc2deltalake_spark.plans import destination
+    from odbc2deltalake_spark.plans.db_to_delta import read_current_rows
+    from odbc2deltalake_spark.streaming.driver import foreach_batch_append
+    from odbc2deltalake_spark.tablestore import TableStore
+    from tests.cdc_utils import ROWS_V1, USER_SCHEMA, make_source, run_load
+
+    engine = ("odbc2deltalake_spark.plans.", "odbc2deltalake_spark.streaming.driver")
+    calls: dict[str, set[str]] = {}
+
+    class Recording(VersionedParquetTable):
+        def __getattribute__(self, name):
+            attr = super().__getattribute__(name)
+            caller = sys._getframe(1).f_globals.get("__name__", "")
+            if name.startswith("_") or not callable(attr) or not caller.startswith(engine):
+                return attr
+
+            def call(*args, **kwargs):
+                calls.setdefault(name, set()).update(kwargs)
+                return attr(*args, **kwargs)
+
+            return call
+
+    monkeypatch.setattr(destination, "VersionedParquetTable", Recording)
+    dest = str(tmp_path / "dest")
+    src = make_source(spark)
+
+    def load(rows, cfg=None, check=True):
+        src.set_df(spark.createDataFrame(rows, USER_SCHEMA))
+        run_load(spark, src, dest, cfg, check=check)
+
+    def marie(age, rv):
+        return ROWS_V1[1:] + [(4, "Marie", "Curie", age, "c3", rv)]
+
+    load(ROWS_V1)  # full
+    load(marie(66.0, 1004))  # delta, with a delete
+    load(marie(66.0, 1004))  # no-op
+    with monkeypatch.context() as m:  # fails after the index write
+        m.setattr(destination.DeltaDestination, "maintain_side_tables", lambda *a: 1 / 0)
+        with _pytest.raises(ZeroDivisionError):
+            load(marie(67.0, 1005), check=False)
+    load(marie(68.0, 1006), WriteConfig(load_mode="simple_delta"))
+    load(marie(68.0, 1006) + [(5, "Ada", "King", 36.0, "c4", 1007)],
+         WriteConfig(load_mode="append_inserts"), check=False)
+    read_current_rows(spark, dest, ["User_-_iD"], "time_stamp").collect()
+    append = foreach_batch_append(Recording(tmp_path / "append"))
+    append(spark.createDataFrame(ROWS_V1, USER_SCHEMA), 0)
+
+    surface = {n for n in dir(TableStore) if not n.startswith("_")}
+    assert set(calls) == surface, (
+        f"called outside the ABC: {sorted(set(calls) - surface)}; "
+        f"in the ABC, never called: {sorted(surface - set(calls))}"
+    )
+    for name, kwargs in calls.items():
+        params = set(inspect.signature(getattr(TableStore, name)).parameters)
+        assert kwargs <= params, f"{name} passed {sorted(kwargs - params)}"
 
 
 def test_count_rows_metadata_backed(spark, tmp_path):
@@ -699,26 +741,6 @@ def test_merge_schema_evolution_widened_value_column(spark, tmp_path):
     got = {r["id"]: r["n"] for r in out.collect()}
     assert got[0] == 6_000_000_000 and got[5] == 5 and len(got) == 32
     assert out.count() == out.select("id").distinct().count()
-
-
-def test_delta_store_module_imports_and_gates():
-    """delta_store.py must be importable (it is never executed in this
-    container otherwise) and must raise ImportError only at construction
-    when delta-spark is absent."""
-    import importlib
-
-    import pytest
-
-    mod = importlib.import_module("odbc2deltalake_spark.delta_store")
-    try:
-        import delta  # noqa: F401
-
-        has_delta = True
-    except ImportError:
-        has_delta = False
-    if not has_delta:
-        with pytest.raises(ImportError):
-            mod.DeltaTableStore("/tmp/nope")
 
 
 def test_aborted_write_invisible_and_vacuumed(spark, tmp_path):
@@ -1114,249 +1136,20 @@ def test_merge_upsert_with_delete_keys_one_commit(spark, tmp_path):
 
 
 def test_store_merge_signatures_stay_polymorphic():
-    """The plans layer calls merge_upsert with strategy/delete_keys on
-    WHICHEVER store backs latest_pk_version — both implementations must
-    accept the full kwarg surface (a Delta store maps strategy to its
-    own deletion-vector property), or a Delta-backed deployment
-    TypeErrors at runtime."""
-    import importlib
+    """The materialized views call merge_upsert with strategy and
+    delete_keys, and the incremental join with extra_commit_fields: the
+    parquet store keeps that kwarg surface beyond the TableStore one."""
     import inspect
 
-    from odbc2deltalake_spark.tablestore import VersionedParquetTable
-
-    mod = importlib.import_module("odbc2deltalake_spark.delta_store")
     need = {"strategy", "delete_keys",
             "extra_commit_fields", "target_bucket_rows"}
-    for cls in (VersionedParquetTable, mod.DeltaTableStore):
-        params = set(inspect.signature(cls.merge_upsert).parameters)
-        missing = need - params
-        assert not missing, f"{cls.__name__}.merge_upsert lacks {missing}"
+    params = set(inspect.signature(VersionedParquetTable.merge_upsert).parameters)
+    missing = need - params
+    assert not missing, f"VersionedParquetTable.merge_upsert lacks {missing}"
     # and the lazy kwarg on the parquet store's DML stays optional-only
     for meth in ("delete_where", "update_where"):
         p = inspect.signature(getattr(VersionedParquetTable, meth)).parameters
         assert p["lazy"].default is False
-
-
-def test_delta_store_sql_literal_rendering():
-    """ADVICE r8 (low): CHECK constraint SQL interpolated Python repr —
-    datetime.date(...) is not SQL and embedded quotes broke the
-    statement. The literal renderer is pure (no delta-spark needed)."""
-    import datetime
-    import decimal
-    import importlib
-
-    lit = importlib.import_module(
-        "odbc2deltalake_spark.delta_store"
-    ).DeltaTableStore._sql_literal
-    assert lit(True) == "TRUE" and lit(False) == "FALSE"
-    assert lit(42) == "42" and lit(2.5) == "2.5"
-    assert lit(decimal.Decimal("1.10")) == "1.10"
-    assert lit(datetime.date(2026, 8, 15)) == "DATE '2026-08-15'"
-    assert (
-        lit(datetime.datetime(2026, 8, 15, 9, 30))
-        == "TIMESTAMP '2026-08-15 09:30:00'"
-    )
-    assert lit("o'neill") == "'o''neill'"
-    with _pytest.raises(ValueError):
-        lit(object())
-
-
-def test_delta_store_constraint_name_validated():
-    """Same name grammar as the parquet store — no SQL injection via the
-    constraint name. Checked before any session use, so it raises even
-    without delta-spark installed."""
-    import importlib
-
-    mod = importlib.import_module("odbc2deltalake_spark.delta_store")
-    store = object.__new__(mod.DeltaTableStore)  # skip delta import
-    store.root = "/tmp/x"
-    with _pytest.raises(ValueError, match="invalid constraint name"):
-        store.set_check_constraint(None, "bad name; DROP", ("id", ">", 0))
-    with _pytest.raises(ValueError, match="requires a predicate"):
-        store.set_check_constraint(None, "ok_name", [])
-
-
-def test_delta_store_parity_matrix_covers_full_public_surface():
-    """VERDICT r9 #4: every public VersionedParquetTable capability has
-    a DeltaTableStore row — pass-through, documented translation, or
-    explicit refusal. Enumerated from the parquet store's live surface
-    so a NEW public method cannot ship without a parity decision (this
-    test fails listing it). Import-gated like the rest of the delta
-    rows: signature checks and refusal raises need no delta-spark."""
-    import importlib
-    import inspect
-
-    mod = importlib.import_module("odbc2deltalake_spark.delta_store")
-    D = mod.DeltaTableStore
-    V = VersionedParquetTable
-
-    # documented translations / pass-throughs whose delta-side signature
-    # must carry the parquet store's kwargs
-    for meth, need in {
-        "clone_to": {"dest", "version", "timestamp"},
-        "drop_column": {"name"},
-        "restore": {"version", "timestamp"},
-        "read": {"version", "timestamp", "skip_where", "buckets"},
-        "write": {"identity_col", "bloom_cols", "txn", "merge_schema",
-                  "overwrite_schema", "partition_by"},
-        "history": set(),
-        "version_at_timestamp": {"ts"},
-        "check_constraints": set(),
-        "set_check_constraint": {"name", "predicate"},
-        "drop_check_constraint": {"name"},
-    }.items():
-        sig = set(inspect.signature(getattr(D, meth)).parameters)
-        missing = need - sig
-        assert not missing, f"DeltaTableStore.{meth} lacks {missing}"
-
-    # explicit refusals must raise NotImplementedError BEFORE any
-    # session/table access — loud by construction
-    with _pytest.raises(NotImplementedError):
-        D.read_keys(None, None, [])
-    with _pytest.raises(NotImplementedError):
-        D.auto_maintain(None)
-
-    # the matrix is exhaustive: every public parquet-store method is on
-    # the delta store OR in this documented exemption map (the Delta
-    # runtime's native home for the capability). A new method failing
-    # here needs a parity decision, not a bigger exemption by reflex.
-    exempt = {
-        "analyze": "ANALYZE TABLE ... COMPUTE STATISTICS (engine-side)",
-        "column_stats": "reads analyze's output — same native home",
-        "buckets_for_keys": "bucket routing is parquet-store physical "
-                            "layout; Delta prunes via stats/Z-order",
-        "checkpoint": "the Delta runtime writes its own _last_checkpoint",
-        "compact": "OPTIMIZE (bin-packing) via the Delta runtime",
-        "fold_masks": "no lazy-mask plane on Delta: delete_where/"
-                      "update_where are immediate merge-on-write",
-        "fold_patches": "no patch plane: Delta MERGE routes "
-                        "copy-on-write vs deletion vectors itself",
-        "maintenance_report": "Delta surfaces this via DESCRIBE DETAIL "
-                              "+ history, consumed by the runtime",
-        "merge_delete_keys": "delete_keys kwarg on merge_upsert IS the "
-                             "delta-side surface (whenMatchedDelete)",
-        "read_changes": "native CDF: read with readChangeFeed=true",
-        "read_changes_cdf": "same — requires delta.enableChangeDataFeed",
-        "read_changes_fold": "IVM fold shape over the commit log; on "
-                             "Delta consumers fold native CDF batches",
-        "truncate_log": "delta.logRetentionDuration property",
-    }
-    pub = {
-        n for n, f in vars(V).items()
-        if callable(f) and not n.startswith("_")
-    }
-    dpub = {n for n in dir(D) if not n.startswith("_")}
-    unmapped = sorted(pub - dpub - set(exempt))
-    assert not unmapped, f"no parity row for {unmapped}"
-    # exemptions must not go stale: each names a REAL parquet method
-    stale = sorted(set(exempt) - pub)
-    assert not stale, f"exempt rows for methods that no longer exist: {stale}"
-    # and an exemption must not shadow an implemented method
-    shadowed = sorted(set(exempt) & dpub)
-    assert not shadowed, f"implemented but still exempt: {shadowed}"
-
-
-def test_delta_check_constraint_sql_round_trips():
-    """VERDICT r10 #4: the delta store's CHECK-constraint translation
-    round-trips — the canonical SQL it emits for ADD CONSTRAINT parses
-    back (from where Delta stores it: the delta.constraints.* table
-    property) to the exact conjunct shape the parquet store's
-    check_constraints() returns. Classmethod-level, so it runs without
-    delta-spark installed — the grammar is the contract."""
-    import datetime
-
-    import importlib
-
-    D = importlib.import_module("odbc2deltalake_spark.delta_store").DeltaTableStore
-
-    cases = [
-        [("qty", ">=", 0)],
-        [("qty", ">", 0), ("price", "<=", 99.5)],
-        [("flag", "=", True), ("state", "!=", "x'); DROP")],
-        [("state", "in", ["a", "b''c", "d"])],
-        [("n", "in", [1, 2, 3]), ("s", "<>", "it's")],
-        [("d", ">=", datetime.date(2024, 1, 2))],
-        [("ts", "<", datetime.datetime(2024, 1, 2, 3, 4, 5, 123456))],
-    ]
-    for conj in cases:
-        sql = D._check_sql(conj)
-        assert D._parse_check_sql(sql) == conj, (conj, sql)
-
-    # a foreign (non-canonical) expression refuses loudly, never
-    # misparses — enforcement still lives in the Delta runtime
-    for foreign in ("qty > 0 OR price < 1", "length(s) < 10",
-                    "`a` BETWEEN 1 AND 2"):
-        with _pytest.raises(NotImplementedError):
-            D._parse_check_sql(foreign)
-
-
-def test_delta_check_constraint_grammar_property():
-    """Hypothesis round-trip over the canonical constraint grammar:
-    ANY conjunct list the parquet store accepts must survive
-    render -> parse bit-exactly — including strings full of quotes,
-    negative/expontent floats, and mixed IN lists."""
-    import datetime
-    import importlib
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    D = importlib.import_module(
-        "odbc2deltalake_spark.delta_store"
-    ).DeltaTableStore
-
-    col = st.from_regex(r"[A-Za-z_][A-Za-z0-9_]{0,10}", fullmatch=True)
-    scalar = st.one_of(
-        st.integers(min_value=-(2**62), max_value=2**62),
-        st.floats(allow_nan=False, allow_infinity=False, width=64),
-        st.booleans(),
-        st.text(max_size=12),
-        st.dates(min_value=datetime.date(1, 1, 2)),
-        st.datetimes(min_value=datetime.datetime(1, 1, 2)),
-    )
-    clause = st.one_of(
-        st.tuples(col, st.sampled_from(["=", "!=", "<", "<=", ">", ">="]),
-                  scalar),
-        st.tuples(col, st.just("in"),
-                  st.lists(scalar, min_size=1, max_size=4)),
-    )
-
-    @settings(max_examples=200, deadline=None, derandomize=True)
-    @given(conj=st.lists(clause, min_size=1, max_size=4))
-    def run(conj):
-        conj = [tuple(c) for c in conj]
-        # the degenerate all-NULL IN list renders as FALSE and is
-        # documented non-round-trippable; keep at least one non-null
-        for c, op, v in conj:
-            if op == "in" and all(x is None for x in v):
-                return
-        sql = D._check_sql(conj)
-        back = D._parse_check_sql(sql)
-        want = [
-            (c, op, [x for x in v if x is not None] if op == "in" else v)
-            for c, op, v in conj
-        ]
-        assert len(back) == len(want)
-        for (gc, gop, gv), (wc, wop, wv) in zip(back, want):
-            assert (gc, gop) == (wc, wop)
-            if wop == "in":
-                assert len(gv) == len(wv)
-                for g, w in zip(gv, wv):
-                    _val_eq(g, w)
-            else:
-                _val_eq(gv, wv)
-
-    def _val_eq(g, w):
-        import math
-        if isinstance(w, bool) or isinstance(g, bool):
-            assert g == w
-        elif isinstance(w, float):
-            assert (math.isclose(g, w, rel_tol=0, abs_tol=0)
-                    or str(g) == str(w)), (g, w)
-        else:
-            assert g == w, (g, w)
-
-    run()
 
 
 def _probe_route(spark, t, col, monkeypatch, probe="max_and_count"):
@@ -1470,13 +1263,15 @@ def test_max_and_count_from_footers(spark, tmp_path, monkeypatch):
     )
     assert route(w, "n") == "scan" and route(w, "id") == "footer"
 
-    # an all-NULL row group carries no min/max statistics
+    # an all-NULL row group carries no min/max statistics, but its null
+    # count equals its row count, so the footers still answer
     z = VersionedParquetTable(tmp_path / "z")
     z.write(
         spark.createDataFrame([(1, "a", None)], "id long, v string, n long"),
         mode="overwrite",
     )
-    assert route(z, "n") == "scan" and route(z, "id") == "footer"
+    assert route(z, "n") == "footer" and route(z, "id") == "footer"
+    assert z.max_and_count(spark, "n") == (None, 1)
 
     # footers of a non-local data plane are not read
     f = VersionedParquetTable(
